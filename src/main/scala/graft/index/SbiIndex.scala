@@ -74,20 +74,6 @@ object SbiIndex {
   }
 }
 
-/** Streaming sampler used by writers: records every `granularity`-th record
-  * start, starting with record 0.
-  */
-final class SbiSampler(granularity: Long) extends Serializable {
-  private val acc = Array.newBuilder[Long]
-  private var count = 0L
-  def record(voff: Long): Unit = {
-    if (count % granularity == 0) acc += voff
-    count += 1
-  }
-  def sampled: Array[Long] = acc.result()
-  def total: Long = count
-}
-
 /** Genomic coordinate sidecar (graft-native, written alongside `.sbi` by
   * the single-file BAM sink): for every SBI-sampled record, its (refId,
   * pos), plus the max alignment SPAN (end − start) of the records in the

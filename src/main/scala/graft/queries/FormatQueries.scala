@@ -78,12 +78,21 @@ object FormatQueries {
     * instead of idling the cluster. Each job's output file is byte-identical
     * to the sequential run — only scheduling overlap changes. Exceptions
     * propagate after all jobs settle (a second failure is suppressed onto
-    * the first).
+    * the first). If the caller stops waiting early (interrupt, cancellation),
+    * no sibling outlives the call: their threads are interrupted and their
+    * Spark jobs cancelled.
     */
-  private def inParallel(jobs: (() => Unit)*): Unit = {
+  private[queries] def inParallel(jobs: (() => Unit)*): Unit = {
+    val sc = SparkSession.active.sparkContext
+    // every Spark job a sibling submits carries this tag (tags leave the
+    // caller's job group alone), so an early exit can cancel them all
+    val tag = s"graft-inParallel-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.length)
+    var settled = false
     try {
-      val futures = jobs.map(j => pool.submit(new Runnable { override def run(): Unit = j() }))
+      val futures = jobs.map(j => pool.submit(new Runnable {
+        override def run(): Unit = { sc.addJobTag(tag); try j() finally sc.removeJobTag(tag) }
+      }))
       // await ALL jobs (no sibling keeps writing after the query "failed"),
       // rethrow the first failure's CAUSE (not the ExecutionException
       // wrapper) with later failures attached as suppressed
@@ -96,8 +105,22 @@ object FormatQueries {
             if (first == null) first = cause else first.addSuppressed(cause)
         }
       }
+      settled = true
       if (first != null) throw first
-    } finally pool.shutdown()
+    } finally {
+      if (settled) pool.shutdown()
+      else {
+        // an interrupt ends a sibling's wait in runJob, not its job: cancel
+        // by tag until every sibling thread has exited
+        pool.shutdownNow()
+        val interrupted = Thread.interrupted() // restored once siblings are gone
+        try while ({
+          sc.cancelJobsWithTag(tag)
+          !pool.awaitTermination(100, java.util.concurrent.TimeUnit.MILLISECONDS)
+        }) ()
+        finally if (interrupted) Thread.currentThread().interrupt()
+      }
+    }
   }
 
   // Construction writes below pass compressionLevel=1: the file is a

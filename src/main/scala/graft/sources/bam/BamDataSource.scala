@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -20,7 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.bam._
 import graft.bgzf.Bgzf
 import graft.index.{GciIndex, SbiIndex}
-import graft.sources.{GenomicInterval, HadoopIO, PushedRegion, SerializableConf, SplitSizing, Stringency, StringencyLog}
+import graft.sources.{GenomicInterval, HadoopIO, PartSpec, PushedRegion, SerializableConf, SinkCodec,
+  SinkFiles, SinkOptions, SinkPart, SinkPartMessage, SinkTable, SplitSizing, Stringency, StringencyLog}
 
 /** `spark.read.format("bam")` / `df.write.format("bam")` — the Spark-native
   * re-expression of the reference's HtsjdkReadsRddStorage BAM path
@@ -102,15 +102,16 @@ private[sources] object TagCols {
     }
 }
 
-class BamTable(properties: Map[String, String]) extends Table with SupportsRead with SupportsWrite {
+class BamTable(properties: Map[String, String]) extends Table with SupportsRead with SinkTable {
   override def name(): String = s"bam:${properties.getOrElse("path", "?")}"
   override def schema(): StructType = TagCols.schemaWith(Opts.normalize(properties))
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.TRUNCATE).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new BamScanBuilder(options.asScala.toMap)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new BamWriteBuilder(info.options.asScala.toMap, info.schema())
+  override protected def sinkName: String = "bam"
+  override protected def singleFileExts: Seq[String] = Seq(".bam")
+  override protected def sinkCodec(o: SinkOptions, schema: StructType): SinkCodec[_] = BamSink(o, schema)
 }
 
 // ---------------------------------------------------------------------------
@@ -764,187 +765,90 @@ class BamPartitionReader(p: BamInputPartition, conf: SerializableConf, required:
 // Write path
 // ---------------------------------------------------------------------------
 
-class BamWriteBuilder(options: Map[String, String], schema: StructType)
-    extends WriteBuilder with SupportsTruncate {
-  override def truncate(): WriteBuilder = this // writes always replace (reference README.md:53)
-  override def build(): Write = new BamWrite(options, schema)
-}
-
-class BamWrite(options0: Map[String, String], schema: StructType) extends Write {
-  private val options = Opts.normalize(options0)
-  override def toBatch: BatchWrite = {
-    val path = options.getOrElse("path", throw new IllegalArgumentException("bam sink requires a path"))
-    val refs = SamHeader.parseRefsOption(options.getOrElse("refs",
+object BamSink {
+  def apply(o: SinkOptions, schema: StructType): BamSink = {
+    val refs = SamHeader.parseRefsOption(o.get("refs").getOrElse(
       throw new IllegalArgumentException("bam sink requires option refs=name:length,…")))
-    val header = options.get("headertext") match {
+    val header = o.get("headertext") match {
       case Some(t) => SamHeader(t, refs)
       case None => SamHeader(refs)
     }
-    val singleFile = path.endsWith(".bam")
     val sbiGranularity =
-      if (options.get("writesbi").exists(_.toBoolean))
-        options.get("sbigranularity").map(_.toLong).getOrElse(SbiIndex.DefaultGranularity)
+      if (o.flag("writesbi")) o.get("sbigranularity").map(_.toLong).getOrElse(SbiIndex.DefaultGranularity)
       else -1L
-    val writeBai = options.get("writebai").exists(_.toBoolean) && singleFile
-    // deflate level 0..9 (htsjdk/samtools writer parity); -1 = zlib default
-    val level = options.get("compressionlevel").map(_.toInt)
-      .getOrElse(java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    require(level == -1 || (level >= 0 && level <= 9), s"compressionLevel out of range: $level")
-    new BamBatchWrite(path, header, singleFile, schema, sbiGranularity, writeBai, level,
-      new SerializableConf(SparkSession.active.sessionState.newHadoopConf()))
+    new BamSink(header, schema, sbiGranularity, o.flag("writebai") && o.singleFile, o.level)
   }
 }
 
-case class BamPartMessage(path: String, records: Long, compressedBytes: Long,
-    sampledVoffs: Array[Long], sampledRefs: Array[Int], sampledPos: Array[Int],
-    sampledSpans: Array[Int], // max (end−start) per sample window
-    partSorted: Boolean, firstRef: Int, firstPos: Int, lastRef: Int, lastPos: Int,
-    bai: graft.index.BaiPartData) // null unless writeBai
-  extends WriterCommitMessage
-
-/** Single-file mode: tasks write headerless BGZF parts into `path.parts/`;
-  * commit writes `header` + `terminator` and merges in name order (names
-  * chosen so header < part-* < terminator lexicographically — the invariant
-  * the reference's Merger relies on, BamSink.java:41-68, Merger.java:17-29).
-  * Sharded mode: tasks write complete per-partition BAMs (AnySamSinkMultiple
-  * .java:39-73 semantics — native Spark one-file-per-partition shape).
+/** BAM pieces of the shared sink (reference BamSink.java:31-69): BGZF parts,
+  * the binary header as head, and the `.sbi`/`.gci`/`.bai` co-writes.
   */
-class BamBatchWrite(path: String, header: SamHeader, singleFile: Boolean,
-                    schema: StructType, sbiGranularity: Long, writeBai: Boolean,
-                    level: Int, conf: SerializableConf) extends BatchWrite {
-
-  private val tempDir = path + ".parts"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) {
-      fs.delete(new Path(path), false)
-      fs.delete(new Path(tempDir), true)
-      fs.mkdirs(new Path(tempDir))
-    } else {
-      fs.delete(new Path(path), true)
-      fs.mkdirs(new Path(path))
-    }
-    new BamDataWriterFactory(if (singleFile) tempDir else path, header, singleFile, schema,
-      sbiGranularity, writeBai, level, conf)
+final class BamSink(val header: SamHeader, val schema: StructType, val sbiGranularity: Long,
+    val writeBai: Boolean, override val level: Int) extends SinkCodec[BamPartReport] {
+  override def shardSuffix: String = ".bam"
+  override def bgzf(name: String): Boolean = true
+  override def newPart(spec: PartSpec): SinkPart[BamPartReport] = new BamPart(spec, this)
+  lazy val headBytes: Array[Byte] = {
+    val b = new java.io.ByteArrayOutputStream()
+    BamCodec.writeHeader(b, header)
+    b.toByteArray
   }
+  override def head(reports: Seq[BamPartReport]): Array[Byte] = headBytes
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = if (singleFile) {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    // header part (BGZF, no terminator)
-    val ho = fs.create(new Path(tempDir, "header"), true)
-    val hb = new graft.bgzf.BgzfOutputStream(ho, writeEof = false, level = level)
-    BamCodec.writeHeader(hb, header)
-    hb.close()
-    val headerBytes = fs.getFileStatus(new Path(tempDir, "header")).getLen
-    // terminator part: the spec 28-byte EOF block
-    val to = fs.create(new Path(tempDir, "terminator"), true)
-    to.write(Bgzf.EofBlock)
-    to.close()
-    val allParts = messages.collect { case m: BamPartMessage => m }.sortBy(_.path)
-    // bytes preceding each part after concat (header + earlier parts)
-    val shifts = { var b = headerBytes; allParts.map { m => val s = b; b += m.compressedBytes; s } }
-    // SBI co-write: parts' sampled offsets shift by the bytes that precede
-    // them after concat (header + earlier parts); voff += base << 16
-    if (sbiGranularity > 0) {
-      val parts = allParts
-      var base = headerBytes
-      val all = Array.newBuilder[Long]
-      val gRefs = Array.newBuilder[Int]
-      val gPos = Array.newBuilder[Int]
-      val gSpans = Array.newBuilder[Int]
-      var total = 0L
-      // file is coordinate-sorted iff every part is internally sorted and
-      // part boundaries are non-decreasing (writers checked every record)
-      var sorted = true
-      var prevRef = Int.MinValue; var prevPos = Int.MinValue
-      var lastRef = -1; var lastPos = -1
-      parts.foreach { m =>
-        var i = 0
-        while (i < m.sampledVoffs.length) {
-          all += m.sampledVoffs(i) + (base << 16)
-          gRefs += m.sampledRefs(i); gPos += m.sampledPos(i)
-          gSpans += m.sampledSpans(i)
-          i += 1
-        }
-        if (!m.partSorted) sorted = false
-        if (m.records > 0) {
-          val fr = GciIndex.orderRef(m.firstRef)
-          if (fr < prevRef || (fr == prevRef && m.firstPos < prevPos)) sorted = false
-          prevRef = GciIndex.orderRef(m.lastRef); prevPos = m.lastPos
-          lastRef = m.lastRef; lastPos = m.lastPos
-        }
-        base += m.compressedBytes
-        total += m.records
-      }
-      all += (base << 16) // sentinel: end of records (terminator start)
-      gRefs += lastRef; gPos += lastPos; gSpans += 0 // sentinel window is empty
-      val offsets = all.result() // single result() call: builders are one-shot
-      val fileLength = base + Bgzf.EofBlock.length
-      val so = fs.create(new Path(path + ".sbi"), true)
-      SbiIndex.write(so, SbiIndex(fileLength, total, sbiGranularity, offsets))
-      so.close()
-      val go = fs.create(new Path(path + ".gci"), true)
-      GciIndex.write(go, GciIndex(sorted, sbiGranularity, offsets,
-        gRefs.result(), gPos.result(), gSpans.result()))
-      go.close()
+  override def coWrite(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      parts: Seq[SinkPartMessage[BamPartReport]], shifts: Seq[Long]): Unit = {
+    val reps = parts.map(_.report)
+    // the file is coordinate-sorted iff every part is internally sorted and
+    // part boundaries are non-decreasing (writers checked every record)
+    var prevRef = Int.MinValue; var prevPos = Int.MinValue
+    val sorted = reps.forall { m =>
+      val fr = GciIndex.orderRef(m.firstRef)
+      val ok = m.partSorted && (m.records == 0 || fr > prevRef || (fr == prevRef && m.firstPos >= prevPos))
+      if (m.records > 0) { prevRef = GciIndex.orderRef(m.lastRef); prevPos = m.lastPos }
+      ok
     }
-    HadoopIO.mergeParts(new Path(tempDir), new Path(path), conf.conf)
-    // BAI co-write AFTER the merge so the index's mtime is >= the BAM's —
-    // readers treat an index older than its data file as stale (in-place
-    // rewrite guard) and would otherwise reject every fresh co-write.
-    // Only meaningful for coordinate-sorted output — each writer tracked
-    // record order, the boundary check below completes the proof.
+    if (sbiGranularity > 0) {
+      // parts' sampled offsets shift by the bytes that precede them after
+      // concat: voff += base << 16; the sentinel marks the terminator start
+      val offsets = (reps.zip(shifts).flatMap { case (m, base) => m.sampledVoffs.map(_ + (base << 16)) } :+
+        (shifts.last << 16)).toArray
+      val last = reps.filter(_.records > 0).lastOption
+      SinkFiles.write(fs, new Path(path + ".sbi"))(SbiIndex.write(_, SbiIndex(
+        shifts.last + Bgzf.EofBlock.length, reps.map(_.records).sum, sbiGranularity, offsets)))
+      SinkFiles.write(fs, new Path(path + ".gci"))(GciIndex.write(_, GciIndex(sorted, sbiGranularity,
+        offsets,
+        (reps.flatMap(_.sampledRefs) :+ last.fold(-1)(_.lastRef)).toArray,
+        (reps.flatMap(_.sampledPos) :+ last.fold(-1)(_.lastPos)).toArray,
+        (reps.flatMap(_.sampledSpans) :+ 0).toArray))) // the sentinel window is empty
+    }
+    // a .bai is only meaningful for coordinate-sorted output
     if (writeBai) {
-      var sorted = allParts.forall(_.partSorted)
-      var prevRef = Int.MinValue; var prevPos = Int.MinValue
-      allParts.foreach { m =>
-        if (m.records > 0) {
-          val fr = GciIndex.orderRef(m.firstRef)
-          if (fr < prevRef || (fr == prevRef && m.firstPos < prevPos)) sorted = false
-          prevRef = GciIndex.orderRef(m.lastRef); prevPos = m.lastPos
-        }
-      }
-      if (sorted) {
-        val idx = graft.index.BaiPartData.merge(
-          allParts.map(_.bai).toSeq, shifts.toSeq, header.refs.length)
-        val bo = fs.create(new Path(path + ".bai"), true)
-        graft.index.BaiIndex.write(bo, idx)
-        bo.close()
-      } else
+      if (sorted)
+        SinkFiles.write(fs, new Path(path + ".bai"))(graft.index.BaiIndex.write(_,
+          graft.index.BaiPartData.merge(reps.map(_.bai), shifts, header.refs.length)))
+      else
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"writeBai: output $path is not coordinate-sorted; skipping .bai")
     }
   }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) fs.delete(new Path(tempDir), true)
-  }
 }
 
-class BamDataWriterFactory(dir: String, header: SamHeader, singleFile: Boolean,
-                           schema: StructType, sbiGranularity: Long, writeBai: Boolean,
-                           level: Int, conf: SerializableConf) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new BamDataWriter(dir, header, singleFile, schema, sbiGranularity, writeBai, level, conf, partitionId)
-}
+/** SBI samples (voffs plus genomic coordinates and max span per window),
+  * the sortedness proof, and the `.bai` fragment of one BAM part.
+  */
+case class BamPartReport(records: Long,
+    sampledVoffs: Array[Long], sampledRefs: Array[Int], sampledPos: Array[Int],
+    sampledSpans: Array[Int], // max (end−start) per sample window
+    partSorted: Boolean, firstRef: Int, firstPos: Int, lastRef: Int, lastPos: Int,
+    bai: graft.index.BaiPartData) // null unless writeBai
 
-class BamDataWriter(dir: String, header: SamHeader, singleFile: Boolean,
-                    schema: StructType, sbiGranularity: Long, writeBai: Boolean,
-                    level: Int, conf: SerializableConf, partitionId: Int)
-    extends DataWriter[InternalRow] {
-
-  private val name = if (singleFile) f"part-$partitionId%09d" else f"part-$partitionId%09d.bam"
-  private val partPath = new Path(dir, name)
-  private val fs = partPath.getFileSystem(conf.conf)
-  private val raw = fs.create(partPath, true)
-  private val out = new graft.bgzf.BgzfOutputStream(raw, writeEof = !singleFile, level = level)
+final class BamPart(spec: PartSpec, sink: BamSink) extends SinkPart[BamPartReport](spec, sink) {
+  private val sbiGranularity = sink.sbiGranularity
   private var count = 0L
   // direct InternalRow → wire encoder (BamRowEncoder): no per-record
   // AlignmentRecord/String/Map materialization on the hot path; falls back
   // to the RowToRecord spec path for shapes it can't prove byte-identical
-  private val enc = new graft.bam.BamRowEncoder(schema, header)
+  private val enc = new graft.bam.BamRowEncoder(sink.schema, sink.header)
   // SBI voffs + genomic coordinates of sampled records + sortedness check
   private val sVoffs = Array.newBuilder[Long]
   private val sRefs = Array.newBuilder[Int]
@@ -955,9 +859,9 @@ class BamDataWriter(dir: String, header: SamHeader, singleFile: Boolean,
   private var firstRef = -2; private var firstPos = -2
   private var prevRef = Int.MinValue; private var prevPos = Int.MinValue
 
-  if (!singleFile) BamCodec.writeHeader(out, header)
+  if (sharded) bgzfOut.write(sink.headBytes)
 
-  private val bai = if (writeBai) new graft.index.BaiBuilder else null
+  private val bai = if (sink.writeBai) new graft.index.BaiBuilder else null
 
   override def write(row: InternalRow): Unit = {
     val len = enc.encode(row)
@@ -966,7 +870,7 @@ class BamDataWriter(dir: String, header: SamHeader, singleFile: Boolean,
     if (sbiGranularity > 0) {
       if (count % sbiGranularity == 0) {
         if (count > 0) { sSpans += curSpan; curSpan = 0 } // close previous window
-        sVoffs += out.virtualOffset; sRefs += refId; sPos += pos0
+        sVoffs += bgzfOut.virtualOffset; sRefs += refId; sPos += pos0
       }
       val span = math.max(0, enc.lastEnd - enc.lastStart) // == end0 − pos0
       if (span > curSpan) curSpan = span
@@ -977,32 +881,28 @@ class BamDataWriter(dir: String, header: SamHeader, singleFile: Boolean,
       prevRef = oRef; prevPos = pos0
       if (firstRef == -2) { firstRef = refId; firstPos = pos0 }
     }
-    val vBeg = out.virtualOffset
-    out.write(enc.buf, 0, len)
-    if (bai != null) bai.add(refId, pos0, math.max(pos0, enc.lastEnd - 1), vBeg, out.virtualOffset,
+    val vBeg = bgzfOut.virtualOffset
+    bgzfOut.write(enc.buf, 0, len)
+    if (bai != null) bai.add(refId, pos0, math.max(pos0, enc.lastEnd - 1), vBeg, bgzfOut.virtualOffset,
       mapped = (enc.lastFlags & AlignmentRecord.FlagUnmapped) == 0)
     count += 1
   }
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    val compressed = Bgzf.blockStart(out.virtualOffset) // total bytes after close
-    if (sbiGranularity > 0 && !singleFile) {
-      // sharded mode: each complete file gets its own .sbi directly;
-      // compressedWritten excludes the trailing EOF block
-      val so = fs.create(new Path(partPath.toString + ".sbi"), true)
-      SbiIndex.write(so, SbiIndex(compressed + Bgzf.EofBlock.length, count,
-        sbiGranularity, sVoffs.result() :+ (compressed << 16)))
-      so.close()
-    }
+
+  private lazy val voffs = sVoffs.result() // builders are one-shot
+
+  override protected def finish(): BamPartReport = {
     if (count > 0) sSpans += curSpan // close the final (possibly partial) window
-    BamPartMessage(partPath.toString, count, compressed,
-      sVoffs.result(), sRefs.result(), sPos.result(), sSpans.result(),
+    BamPartReport(count, voffs, sRefs.result(), sPos.result(), sSpans.result(),
       partSorted, firstRef, firstPos,
       if (prevRef == Int.MinValue) -2 else prevRef, prevPos,
       if (bai != null) bai.result() else null)
   }
-  override def abort(): Unit = { out.close(); fs.delete(partPath, false) }
-  override def close(): Unit = ()
+
+  // a shard's own .sbi: its records end where the trailing EOF block starts
+  override protected def shardSidecar(fileBytes: Long): Option[(String, java.io.OutputStream => Unit)] =
+    if (sbiGranularity <= 0) None
+    else Some(".sbi" -> (SbiIndex.write(_, SbiIndex(fileBytes, count, sbiGranularity,
+      voffs :+ ((fileBytes - Bgzf.EofBlock.length) << 16)))))
 }
 
 /** InternalRow (in dataframe column order) → AlignmentRecord. */

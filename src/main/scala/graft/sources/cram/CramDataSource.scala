@@ -10,7 +10,6 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -18,7 +17,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.bam.{AlignmentRecord, RecordToRow, SamHeader}
 import graft.cram.{CraiEntry, CraiIndex, CramContainer, CramContainers,
   CramRecordCodec, CramRecordWriter, CramRefSource, Fasta, FastaRefSource, NoRefSource}
-import graft.sources.{GenomicInterval, HadoopIO, PushedRegion, SerializableConf, Stringency, StringencyLog}
+import graft.sources.{GenomicInterval, HadoopIO, PartSpec, PushedRegion, SerializableConf, SinkCodec,
+  SinkFiles, SinkOptions, SinkPart, SinkPartMessage, SinkTable, Stringency, StringencyLog}
 
 /** `format("cram")` — CRAM scan/sink (reference CramSource.java:57-151,
   * CramSink.java:35-85).
@@ -89,7 +89,7 @@ object CramTable {
     StructField("n_blocks", IntegerType, nullable = false)))
 }
 
-class CramTable(properties: Map[String, String]) extends Table with SupportsRead with SupportsWrite {
+class CramTable(properties: Map[String, String]) extends Table with SupportsRead with SinkTable {
   private val records = CramDataSource.recordsMode(properties)
   override def name(): String = s"cram:${properties.getOrElse("path", "?")}"
   override def schema(): StructType =
@@ -105,10 +105,9 @@ class CramTable(properties: Map[String, String]) extends Table with SupportsRead
       TableCapability.ACCEPT_ANY_SCHEMA).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new CramScanBuilder(options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v })
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val opts = info.options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new CramWriteBuilder(opts, info.schema())
-  }
+  override protected def sinkName: String = "cram"
+  override protected def singleFileExts: Seq[String] = Seq(".cram")
+  override protected def sinkCodec(o: SinkOptions, schema: StructType): SinkCodec[_] = CramSink(o, schema)
 }
 
 class CramScanBuilder(options: Map[String, String])
@@ -825,55 +824,43 @@ class CramRecordsPartitionReader(
 
 // ---- write path -----------------------------------------------------------
 
-class CramWriteBuilder(options: Map[String, String], schema: StructType)
-    extends WriteBuilder with SupportsTruncate {
-  override def truncate(): WriteBuilder = this
-  override def build(): Write = new CramWrite(options, schema)
-}
-
-class CramWrite(options: Map[String, String], schema: StructType) extends Write {
-  override def toBatch: BatchWrite = {
-    val path = options.getOrElse("path", throw new IllegalArgumentException("cram sink requires a path"))
-    // write-option inference (the BAM/VCF convention): a `.cram` path is a
-    // single file via parts + name-order concat; anything else is a sharded
-    // directory of COMPLETE per-partition .cram files (AnySamSinkMultiple
-    // semantics, reference AnySamSinkMultiple.java:39-73)
-    val singleFile = path.endsWith(".cram")
+object CramSink {
+  def apply(o: SinkOptions, schema: StructType): CramSink = {
+    val records = o.flag("records")
     // records mode co-writes the `.crai` by DEFAULT (option still wins both
     // ways): the index is one text line per slice, and its presence turns
     // every downstream scan's planning into O(index) with zero executor-side
     // boundary discovery — the shape that matters at 100 TB. Container-spec
     // mode keeps the opt-in default (its zero-payload containers produce no
     // slice entries, and an empty `.crai` would plan an empty scan).
-    val writeCrai = options.get("writecrai").map(_.toBoolean)
-      .getOrElse(CramDataSource.recordsMode(options))
+    val writeCrai = o.get("writecrai").map(_.toBoolean).getOrElse(records)
     // records mode: rows are AlignmentRecords, encoded by the v3 record
     // writer; the header dictionary comes from `refs` like the BAM sink
     val recordsHeader: Option[SamHeader] =
-      if (CramDataSource.recordsMode(options)) {
-        val refs = SamHeader.parseRefsOption(options.getOrElse("refs",
+      if (records) {
+        val refs = SamHeader.parseRefsOption(o.get("refs").getOrElse(
           throw new IllegalArgumentException(
             "cram records sink requires refs (name:length,…)")))
-        Some(options.get("headertext") match {
+        Some(o.get("headertext") match {
           case Some(t) => SamHeader(t, refs)
           case None => SamHeader(refs)
         })
       } else None
-    val perContainer = options.get("recordspercontainer").map(_.toInt).getOrElse(10000)
+    val perContainer = o.get("recordspercontainer").map(_.toInt).getOrElse(10000)
     // reference-based encode: a fasta option on a records write switches
     // match positions to implicit/X-substitution form (CramRecordWriter)
-    val fasta = if (recordsHeader.isDefined) options.get("fasta") else None
+    val fasta = if (recordsHeader.isDefined) o.get("fasta") else None
     // CRAM version: 3.0 (default) or 3.1 (record blocks upgrade to rANS
     // Nx16, file definition minor = 1). codec=arith (3.1 only) swaps the
     // record-block entropy stage for the adaptive arithmetic coder
     // (CRAM method 6).
-    val v31 = options.get("version") match {
+    val v31 = o.get("version") match {
       case None | Some("3.0") => false
       case Some("3.1") => true
       case Some(v) => throw new IllegalArgumentException(
         s"cram sink version must be 3.0 or 3.1, got $v")
     }
-    val wire = options.get("codec") match {
+    val wire = o.get("codec") match {
       case None | Some("rans") => if (v31) 1 else 0
       case Some("arith") =>
         if (!v31) throw new IllegalArgumentException(
@@ -882,150 +869,102 @@ class CramWrite(options: Map[String, String], schema: StructType) extends Write 
       case Some(c) => throw new IllegalArgumentException(
         s"cram sink codec must be rans or arith, got $c")
     }
-    // names=tok3 (3.1 only): RN blocks through the CRAM method-8 name
-    // tokenizer; default keeps gzip'd RN, which every reader decodes
-    val tok3 = options.get("names") match {
+    // names=tok3 / quals=fqz (3.1 only): RN blocks through the CRAM method-8
+    // name tokenizer, QS blocks through the method-7 quality codec; the
+    // defaults keep gzip'd RN and the wire's rANS QS, which every reader decodes
+    def v31Only(key: String, alt: String): Boolean = o.get(key) match {
       case None | Some("default") => false
-      case Some("tok3") =>
-        if (!v31) throw new IllegalArgumentException(
-          "cram sink names=tok3 requires version=3.1")
+      case Some(`alt`) =>
+        if (!v31) throw new IllegalArgumentException(s"cram sink $key=$alt requires version=3.1")
         true
       case Some(m) => throw new IllegalArgumentException(
-        s"cram sink names must be default or tok3, got $m")
+        s"cram sink $key must be default or $alt, got $m")
     }
-    // quals=fqz (3.1 only): QS blocks through the CRAM method-7 quality
-    // codec; default keeps the wire's rANS form
-    val fqz = options.get("quals") match {
-      case None | Some("default") => false
-      case Some("fqz") =>
-        if (!v31) throw new IllegalArgumentException(
-          "cram sink quals=fqz requires version=3.1")
-        true
-      case Some(m) => throw new IllegalArgumentException(
-        s"cram sink quals must be default or fqz, got $m")
-    }
-    // gzip level for the series blocks (BGZF-sink parity); -1 = default
-    val level = options.get("compressionlevel").map(_.toInt)
-      .getOrElse(java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    require(level == -1 || (level >= 0 && level <= 9), s"compressionLevel out of range: $level")
-    new CramBatchWrite(path, singleFile, writeCrai, schema,
-      new SerializableConf(SparkSession.active.sessionState.newHadoopConf()),
-      recordsHeader, perContainer, fasta, wire, tok3, fqz, level)
+    val tok3 = v31Only("names", "tok3")
+    val fqz = v31Only("quals", "fqz")
+    // compressionLevel: gzip level of the series blocks (BGZF-sink parity)
+    new CramSink(schema, writeCrai, recordsHeader, perContainer, fasta, wire, tok3, fqz, o.level)
   }
 }
 
-case class CramPartMessage(path: String, bytes: Long, entries: Seq[CraiEntry])
-  extends WriterCommitMessage
-
-/** Single-file mode: file-definition part + headerless container parts +
-  * EOF-container part, name-order concat (the BamSink geometry,
-  * reference CramSink.java:44-78); `.crai` entries collected per part and
-  * rebased by the bytes that precede each part after the merge.
-  * Sharded mode: each partition writes a COMPLETE standalone .cram (file
-  * definition + containers + EOF terminator), with a per-shard `.crai`
-  * written executor-side when requested — no driver-side merge at all.
+/** CRAM pieces of the shared sink (reference CramSink.java:35-85): plain
+  * container parts, the file definition (+ SAM-header container in records
+  * mode) as head, the EOF container as tail, and the `.crai` co-write —
+  * per-part entries rebased by the bytes preceding each part, or a
+  * per-shard `.crai` with absolute offsets.
   */
-class CramBatchWrite(path: String, singleFile: Boolean, writeCrai: Boolean,
-                     schema: StructType, conf: SerializableConf,
-                     recordsHeader: Option[SamHeader] = None,
-                     perContainer: Int = 10000,
-                     fastaPath: Option[String] = None,
-                     wire: Int = 0, tok3Names: Boolean = false,
-                     fqzQuals: Boolean = false,
-                     gzipLevel: Int = java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    extends BatchWrite {
-  private val tempDir = path + ".parts"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) {
-      fs.delete(new Path(path), false)
-      fs.delete(new Path(tempDir), true)
-      fs.mkdirs(new Path(tempDir))
-    } else {
-      fs.delete(new Path(path), true)
-      fs.mkdirs(new Path(path))
-    }
-    val dir = if (singleFile) tempDir else path
-    val sch = schema
-    val c = conf
-    val complete = !singleFile
-    val shardCrai = writeCrai && !singleFile
-    val hdr = recordsHeader
-    val perC = perContainer
-    val fasta = fastaPath
-    val wireC = wire
-    val tok3C = tok3Names
-    val fqzC = fqzQuals
-    val lvlC = gzipLevel
-    (partitionId: Int, _: Long) => hdr match {
-      case Some(h) => new CramRecordsDataWriter(dir, h, sch, c, partitionId, complete, shardCrai, perC, fasta, wireC, tok3C, fqzC, lvlC)
-      case None => new CramDataWriter(dir, sch, c, partitionId, complete, shardCrai)
-    }
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = if (singleFile) {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    // records mode prepends the SAM-header container to the file definition
-    // (container mode carries no header container — specs only)
-    val minor = if (wire > 0) 1 else 0
-    val headBytes = recordsHeader match {
-      case Some(h) =>
-        CramContainers.encodeFileDefinition(minor = minor) ++ CramRecordWriter.encodeHeaderContainer(h)
-      case None => CramContainers.encodeFileDefinition(minor = minor)
-    }
-    val ho = fs.create(new Path(tempDir, "header"), true)
-    ho.write(headBytes)
-    ho.close()
-    val to = fs.create(new Path(tempDir, "terminator"), true)
-    to.write(CramContainers.encodeEofContainer())
-    to.close()
-    val parts = messages.collect { case m: CramPartMessage => m }.sortBy(_.path)
-    HadoopIO.mergeParts(new Path(tempDir), new Path(path), conf.conf)
-    // .crai co-write AFTER the merge so the index's mtime is >= the CRAM's
-    // (readers reject an index older than its data file as stale)
-    if (writeCrai) {
-      var base = headBytes.length.toLong
-      val rebased = Seq.newBuilder[CraiEntry]
-      parts.foreach { m =>
-        m.entries.foreach(e => rebased += e.copy(containerOffset = e.containerOffset + base))
-        base += m.bytes
+final class CramSink(val schema: StructType, val writeCrai: Boolean,
+    recordsHeader: Option[SamHeader], val perContainer: Int, val fastaPath: Option[String],
+    val wire: Int, val tok3Names: Boolean, val fqzQuals: Boolean, override val level: Int)
+    extends SinkCodec[Seq[CraiEntry]] {
+  override def shardSuffix: String = ".cram"
+  override def newPart(spec: PartSpec): SinkPart[Seq[CraiEntry]] = recordsHeader match {
+    case Some(h) =>
+      require(perContainer > 0, s"recordsPerContainer must be positive, got $perContainer")
+      // ACCEPT_ANY_SCHEMA skips Spark's write-side validation; fail fast on a
+      // record column bound to the wrong type (a silent getInt over a bigint
+      // field would truncate into the container payload)
+      AlignmentRecord.schema.fields.foreach { f =>
+        val i = schema.fieldNames.indexOf(f.name)
+        // catalogString comparison ignores nullability flags (valueContainsNull)
+        // while still catching silent-truncation types (bigint vs int)
+        require(i < 0 || schema.fields(i).dataType.catalogString == f.dataType.catalogString,
+          s"cram records sink column ${f.name} must be ${f.dataType.simpleString}, " +
+            s"got ${schema.fields(i).dataType.simpleString}")
       }
-      val co = fs.create(new Path(path + ".crai"), true)
-      CraiIndex.write(co, CraiIndex(rebased.result()))
-      co.close()
-    }
-  } // sharded: every shard (and its .crai) is already complete on disk
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    fs.delete(new Path(if (singleFile) tempDir else path), true)
+      new CramRecordsPart(spec, this, h)
+    case None => new CramSpecPart(spec, this)
   }
+  lazy val headBytes: Array[Byte] = {
+    val fd = CramContainers.encodeFileDefinition(minor = if (wire > 0) 1 else 0)
+    recordsHeader.fold(fd)(fd ++ CramRecordWriter.encodeHeaderContainer(_))
+  }
+  override def head(reports: Seq[Seq[CraiEntry]]): Array[Byte] = headBytes
+  override val tail: Array[Byte] = CramContainers.encodeEofContainer()
+
+  override def coWrite(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      parts: Seq[SinkPartMessage[Seq[CraiEntry]]], shifts: Seq[Long]): Unit =
+    if (writeCrai) {
+      val rebased = parts.zip(shifts).flatMap { case (m, base) =>
+        m.report.map(e => e.copy(containerOffset = e.containerOffset + base))
+      }
+      SinkFiles.write(fs, new Path(path + ".crai"))(CraiIndex.write(_, CraiIndex(rebased)))
+    }
+}
+
+/** A CRAM part: containers written through [[add]], offsets counted from the
+  * part start (a shard's head included) for its `.crai` entries.
+  */
+abstract class CramPart(spec: PartSpec, sink: CramSink, shardHead: Array[Byte])
+    extends SinkPart[Seq[CraiEntry]](spec, sink) {
+  private var written = 0L
+  private val entries = Seq.newBuilder[CraiEntry]
+  if (sharded) { out.write(shardHead); written += shardHead.length }
+
+  protected final def add(container: Array[Byte], entry: CraiEntry): Unit = {
+    out.write(container)
+    entries += entry.copy(containerOffset = written)
+    written += container.length
+  }
+  /** Writes the containers the part still buffers. */
+  protected def flush(): Unit = ()
+  private lazy val all = entries.result()
+  override protected final def finish(): Seq[CraiEntry] = {
+    flush()
+    if (sharded) out.write(sink.tail)
+    all
+  }
+  override protected def shardSidecar(fileBytes: Long): Option[(String, java.io.OutputStream => Unit)] =
+    if (sink.writeCrai) Some(".crai" -> (CraiIndex.write(_, CraiIndex(all)))) else None
 }
 
 /** Container-spec writer (the default row model): rows are ref_seq_id,
   * start_pos, span, n_records, data_length with opaque zero payloads —
-  * geometry without records; [[CramRecordsDataWriter]] is the record path.
-  * `complete` = sharded mode: this writer emits a standalone .cram
-  * (file definition up front, EOF container at commit, absolute `.crai`
-  * offsets written next to the shard when `shardCrai`).
+  * geometry without records; [[CramRecordsPart]] is the record path.
   */
-class CramDataWriter(dir: String, schema: StructType, conf: SerializableConf, partitionId: Int,
-                     complete: Boolean = false, shardCrai: Boolean = false)
-    extends DataWriter[InternalRow] {
-  private val partPath = new Path(dir, f"part-$partitionId%09d" + (if (complete) ".cram" else ""))
-  private val fs = partPath.getFileSystem(conf.conf)
-  private val out = new java.io.BufferedOutputStream(fs.create(partPath, true), 1 << 16)
-  private var written = 0L
-  locally {
-    if (complete) {
-      val fd = CramContainers.encodeFileDefinition()
-      out.write(fd)
-      written += fd.length
-    }
-  }
-  private val entries = Seq.newBuilder[CraiEntry]
-
+final class CramSpecPart(spec: PartSpec, sink: CramSink)
+    extends CramPart(spec, sink, CramContainers.encodeFileDefinition()) {
+  private val schema = sink.schema
   private def idx(n: String): Int = {
     val i = schema.fieldNames.indexOf(n)
     require(i >= 0, s"cram sink requires column $n")
@@ -1048,23 +987,9 @@ class CramDataWriter(dir: String, schema: StructType, conf: SerializableConf, pa
     val refSeqId = row.getInt(iRef)
     val startPos = row.getInt(iStart)
     val span = row.getInt(iSpan)
-    val bytes = CramContainers.encodeContainer(dataLength, refSeqId, startPos, span, row.getInt(iRecs))
-    out.write(bytes)
-    entries += CraiEntry(refSeqId, startPos, span, written, 0, dataLength)
-    written += bytes.length
+    add(CramContainers.encodeContainer(dataLength, refSeqId, startPos, span, row.getInt(iRecs)),
+      CraiEntry(refSeqId, startPos, span, 0L, 0, dataLength))
   }
-  override def commit(): WriterCommitMessage = {
-    if (complete) out.write(CramContainers.encodeEofContainer())
-    out.close()
-    if (shardCrai) {
-      val co = fs.create(new Path(partPath.toString + ".crai"), true)
-      CraiIndex.write(co, CraiIndex(entries.result()))
-      co.close()
-    }
-    CramPartMessage(partPath.toString, written, entries.result())
-  }
-  override def abort(): Unit = { out.close(); fs.delete(partPath, false) }
-  override def close(): Unit = ()
 }
 
 /** Records-mode writer: rows are [[graft.bam.AlignmentRecord]]s, buffered
@@ -1073,74 +998,28 @@ class CramDataWriter(dir: String, schema: StructType, conf: SerializableConf, pa
   * slice record counters restart per part — headerless parts can't know
   * their predecessors' counts before the concat — which no CRAM reader
   * needs for correctness (counters exist for `.crai`-less seeking hints).
-  * `complete` = sharded mode: a standalone .cram per partition (file
-  * definition + header container up front, EOF terminator at commit).
   */
-class CramRecordsDataWriter(dir: String, header: SamHeader, schema: StructType,
-                            conf: SerializableConf, partitionId: Int,
-                            complete: Boolean, shardCrai: Boolean, perContainer: Int,
-                            fastaPath: Option[String] = None,
-                            wire: Int = 0, tok3Names: Boolean = false,
-                            fqzQuals: Boolean = false,
-                            gzipLevel: Int = java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    extends DataWriter[InternalRow] {
-  require(perContainer > 0, s"recordsPerContainer must be positive, got $perContainer")
-  // ACCEPT_ANY_SCHEMA skips Spark's write-side validation; fail fast on a
-  // record column bound to the wrong type (a silent getInt over a bigint
-  // field would truncate into the container payload)
-  AlignmentRecord.schema.fields.foreach { f =>
-    val i = schema.fieldNames.indexOf(f.name)
-    // catalogString comparison ignores nullability flags (valueContainsNull)
-    // while still catching silent-truncation types (bigint vs int)
-    require(i < 0 || schema.fields(i).dataType.catalogString == f.dataType.catalogString,
-      s"cram records sink column ${f.name} must be ${f.dataType.simpleString}, " +
-        s"got ${schema.fields(i).dataType.simpleString}")
-  }
-  private val partPath = new Path(dir, f"part-$partitionId%09d" + (if (complete) ".cram" else ""))
-  private val fs = partPath.getFileSystem(conf.conf)
-  private val out = new java.io.BufferedOutputStream(fs.create(partPath, true), 1 << 16)
-  private var written = 0L
-  locally {
-    if (complete) {
-      val fd = CramContainers.encodeFileDefinition(minor = if (wire > 0) 1 else 0)
-      val hc = CramRecordWriter.encodeHeaderContainer(header)
-      out.write(fd); out.write(hc)
-      written += fd.length + hc.length
-    }
-  }
-  private val idx = graft.sources.bam.RowToRecord.indices(schema)
+final class CramRecordsPart(spec: PartSpec, sink: CramSink, header: SamHeader)
+    extends CramPart(spec, sink, sink.headBytes) {
+  private val idx = graft.sources.bam.RowToRecord.indices(sink.schema)
   private val buf = scala.collection.mutable.ArrayBuffer.empty[AlignmentRecord]
   private var recordCounter = 0L
-  private val entries = Seq.newBuilder[CraiEntry]
   // reference-based encode when the write carries a fasta option
-  private val fastaOpened = fastaPath.map(p => FastaRefs.open(p, conf.conf, header.refName))
+  private val fastaOpened = sink.fastaPath.map(p => FastaRefs.open(p, spec.conf.conf, header.refName))
   private val refSource: CramRefSource = fastaOpened.map(_._2).getOrElse(NoRefSource)
 
-  private def flushContainer(): Unit = if (buf.nonEmpty) {
-    val enc = CramRecordWriter.encodeContainer(buf.toIndexedSeq, header, recordCounter, refSource, wire, tok3Names, fqzQuals, gzipLevel)
-    out.write(enc.bytes)
-    entries += enc.craiEntry.copy(containerOffset = written)
+  override protected def flush(): Unit = if (buf.nonEmpty) {
+    val enc = CramRecordWriter.encodeContainer(buf.toIndexedSeq, header, recordCounter, refSource,
+      sink.wire, sink.tok3Names, sink.fqzQuals, sink.level)
+    add(enc.bytes, enc.craiEntry)
     recordCounter += buf.length
-    written += enc.bytes.length
     buf.clear()
   }
 
   override def write(row: InternalRow): Unit = {
     buf += graft.sources.bam.RowToRecord.convert(row, idx)
-    if (buf.length >= perContainer) flushContainer()
+    if (buf.length >= sink.perContainer) flush()
   }
-  override def commit(): WriterCommitMessage = {
-    flushContainer()
-    if (complete) out.write(CramContainers.encodeEofContainer())
-    out.close()
-    if (shardCrai) {
-      val co = fs.create(new Path(partPath.toString + ".crai"), true)
-      CraiIndex.write(co, CraiIndex(entries.result()))
-      co.close()
-    }
-    CramPartMessage(partPath.toString, written, entries.result())
-  }
-  override def abort(): Unit = { out.close(); fs.delete(partPath, false) }
   override def close(): Unit = fastaOpened.foreach(_._1.close())
 }
 

@@ -9,14 +9,14 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.bam.{AlignmentRecord, BamFieldMask, RecordToRow, SamHeader}
 import graft.sam.SamCodec
-import graft.sources.{GenomicInterval, HadoopIO, SerializableConf, SplitTextReader}
+import graft.sources.{GenomicInterval, HadoopIO, PartSpec, SerializableConf, SinkCodec, SinkOptions, SinkPart,
+  SinkTable, SplitTextReader}
 import graft.sources.bam.{Opts, RowToRecord, TagCols}
 
 /** `format("sam")` — plain-text SAM scan/sink (reference SamSource.java:35-87,
@@ -38,7 +38,7 @@ class SamDataSource extends TableProvider with DataSourceRegister {
     new SamTable(properties.asScala.toMap)
 }
 
-class SamTable(properties: Map[String, String]) extends Table with SupportsRead with SupportsWrite {
+class SamTable(properties: Map[String, String]) extends Table with SupportsRead with SinkTable {
   override def name(): String = s"sam:${properties.getOrElse("path", "?")}"
   override def schema(): StructType = TagCols.schemaWith(Opts.normalize(properties))
   override def capabilities(): util.Set[TableCapability] =
@@ -47,9 +47,15 @@ class SamTable(properties: Map[String, String]) extends Table with SupportsRead 
     val opts = options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
     new SamScanBuilder(opts)
   }
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val opts = info.options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new SamWriteBuilder(opts, info.schema())
+  override protected def sinkName: String = "sam"
+  override protected def singleFileExts: Seq[String] = Seq(".sam")
+  override protected def sinkCodec(o: SinkOptions, schema: StructType): SinkCodec[_] = {
+    val refs = o.get("refs").map(SamHeader.parseRefsOption).getOrElse(IndexedSeq.empty)
+    val header = o.get("headertext") match {
+      case Some(t) => SamHeader(t, SamHeader.refsFromText(t))
+      case None => SamHeader(refs)
+    }
+    new SamSink(header, schema)
   }
 }
 
@@ -235,84 +241,25 @@ class SamPartitionReader(p: SamInputPartition, conf: SerializableConf, required:
 
 // ---- write path -----------------------------------------------------------
 
-class SamWriteBuilder(options: Map[String, String], schema: StructType)
-    extends WriteBuilder with SupportsTruncate {
-  override def truncate(): WriteBuilder = this
-  override def build(): Write = new SamWrite(options, schema)
-}
-
-class SamWrite(options: Map[String, String], schema: StructType) extends Write {
-  override def toBatch: BatchWrite = {
-    val path = options.getOrElse("path", throw new IllegalArgumentException("sam sink requires a path"))
-    val refs = options.get("refs").map(SamHeader.parseRefsOption).getOrElse(IndexedSeq.empty)
-    val header = options.get("headertext") match {
-      case Some(t) => SamHeader(t, SamHeader.refsFromText(t))
-      case None => SamHeader(refs)
-    }
-    new SamBatchWrite(path, header, path.endsWith(".sam"), schema,
-      new SerializableConf(SparkSession.active.sessionState.newHadoopConf()))
-  }
-}
-
-/** Single-file: headerless text parts + `header` part + name-order concat
-  * (no terminator — SamSink.java:37-45). Sharded: complete .sam per part.
+/** SAM pieces of the shared sink: plain text parts, the header text as head,
+  * no terminator (SamSink.java:27-46).
   */
-class SamBatchWrite(path: String, header: SamHeader, singleFile: Boolean,
-                    schema: StructType, conf: SerializableConf) extends BatchWrite {
-  private val tempDir = path + ".parts"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) {
-      fs.delete(new Path(path), false)
-      fs.delete(new Path(tempDir), true)
-      fs.mkdirs(new Path(tempDir))
-    } else {
-      fs.delete(new Path(path), true)
-      fs.mkdirs(new Path(path))
-    }
-    val dir = if (singleFile) tempDir else path
-    val hdr = header
-    val sf = singleFile
-    val c = conf
-    val sch = schema
-    (partitionId: Int, _: Long) => new SamDataWriter(dir, hdr, sf, sch, c, partitionId)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = if (singleFile) {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    val ho = fs.create(new Path(tempDir, "header"), true)
-    ho.write(header.text.getBytes("UTF-8"))
-    ho.close()
-    HadoopIO.mergeParts(new Path(tempDir), new Path(path), conf.conf)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) fs.delete(new Path(tempDir), true)
-  }
+final class SamSink(header: SamHeader, val schema: StructType) extends SinkCodec[Unit] {
+  override def shardSuffix: String = ".sam"
+  override def newPart(spec: PartSpec): SinkPart[Unit] = new SamPart(spec, this)
+  lazy val headBytes: Array[Byte] = header.text.getBytes("UTF-8")
+  override def head(reports: Seq[Unit]): Array[Byte] = headBytes
 }
 
-class SamDataWriter(dir: String, header: SamHeader, singleFile: Boolean,
-                    schema: StructType, conf: SerializableConf, partitionId: Int)
-    extends DataWriter[InternalRow] {
-  private val name = if (singleFile) f"part-$partitionId%09d" else f"part-$partitionId%09d.sam"
-  private val partPath = new Path(dir, name)
-  private val fs = partPath.getFileSystem(conf.conf)
-  private val out = new java.io.BufferedOutputStream(fs.create(partPath, true), 1 << 16)
+final class SamPart(spec: PartSpec, sink: SamSink) extends SinkPart[Unit](spec, sink) {
   // direct InternalRow → line-bytes encoder; falls back to the
   // RowToRecord + SamCodec.toLine spec path for non-fast-path shapes
-  private val enc = new graft.sam.SamRowEncoder(schema)
-  if (!singleFile) out.write(header.text.getBytes("UTF-8"))
+  private val enc = new graft.sam.SamRowEncoder(sink.schema)
+  if (sharded) out.write(sink.headBytes)
 
   override def write(row: InternalRow): Unit = {
     val len = enc.encode(row)
     out.write(enc.buf, 0, len)
   }
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    new WriterCommitMessage {}
-  }
-  override def abort(): Unit = { out.close(); fs.delete(partPath, false) }
-  override def close(): Unit = ()
+  override protected def finish(): Unit = ()
 }

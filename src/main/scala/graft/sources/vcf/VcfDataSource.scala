@@ -11,13 +11,13 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.{GenomicInterval, HadoopIO, SerializableConf, SplitTextReader}
+import graft.sources.{GenomicInterval, HadoopIO, PartSpec, SerializableConf, SinkCodec, SinkFiles, SinkOptions,
+  SinkPart, SinkPartMessage, SinkTable, SplitTextReader}
 import graft.vcf.{Genotype, Variant, VcfCodec, VcfHeader}
 
 /** `format("vcf")` — VCF scan/sink over plain, BGZF (.vcf.bgz / BGZF .vcf.gz,
@@ -49,7 +49,7 @@ class VcfDataSource extends TableProvider with DataSourceRegister {
     new VcfTable(properties.asScala.toMap)
 }
 
-class VcfTable(properties: Map[String, String]) extends Table with SupportsRead with SupportsWrite {
+class VcfTable(properties: Map[String, String]) extends Table with SupportsRead with SinkTable {
   override def name(): String = s"vcf:${properties.getOrElse("path", "?")}"
   override def schema(): StructType = Variant.schema
   override def capabilities(): util.Set[TableCapability] =
@@ -58,10 +58,9 @@ class VcfTable(properties: Map[String, String]) extends Table with SupportsRead 
     val opts = options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
     new VcfScanBuilder(opts)
   }
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val opts = info.options.asScala.toMap.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new VcfWriteBuilder(opts, info.schema())
-  }
+  override protected def sinkName: String = "vcf"
+  override protected def singleFileExts: Seq[String] = Seq(".vcf", ".vcf.bgz", ".vcf.gz")
+  override protected def sinkCodec(o: SinkOptions, schema: StructType): SinkCodec[_] = VcfSink(o, schema)
 }
 
 class VcfScanBuilder(options: Map[String, String])
@@ -393,124 +392,56 @@ object VariantRowBuilder {
 
 // ---- write path -----------------------------------------------------------
 
-class VcfWriteBuilder(options: Map[String, String], schema: StructType)
-    extends WriteBuilder with SupportsTruncate {
-  override def truncate(): WriteBuilder = this
-  override def build(): Write = new VcfWrite(options, schema)
-}
-
-class VcfWrite(options: Map[String, String], schema: StructType) extends Write {
-  override def toBatch: BatchWrite = {
-    val path = options.getOrElse("path", throw new IllegalArgumentException("vcf sink requires a path"))
-    val single = path.endsWith(".vcf") || path.endsWith(".vcf.bgz") || path.endsWith(".vcf.gz")
-    val bgzf = path.endsWith(".bgz") || path.endsWith(".gz")
-    val writeTbi = options.get("writetbi").exists(_.toBoolean) && single && bgzf
-    // tribble `.idx` co-write: the plain-text counterpart of writeTbi
-    val writeIdx = options.get("writeidx").exists(_.toBoolean) && single && !bgzf
+object VcfSink {
+  def apply(o: SinkOptions, schema: StructType): VcfSink = {
+    val bgzf = SinkFiles.bgzfName(o.path)
     // sharded mode: per-shard extension decides the shard codec (reference
     // VcfOutputFormat.java:24-71 — plain, gzip-named-BGZF, or BGZF shards)
-    val shardSuffix = options.getOrElse("shardsuffix", ".vcf")
+    val shardSuffix = o.get("shardsuffix").getOrElse(".vcf")
     require(Seq(".vcf", ".vcf.gz", ".vcf.bgz").contains(shardSuffix),
       s"unsupported shardSuffix $shardSuffix")
-    // deflate level 0..9 for BGZF output (htsjdk writer parity); -1 = zlib default
-    val level = options.get("compressionlevel").map(_.toInt)
-      .getOrElse(java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    require(level == -1 || (level >= 0 && level <= 9), s"compressionLevel out of range: $level")
-    new VcfBatchWrite(path, options.get("vcfheader"), single, bgzf, writeTbi, writeIdx, shardSuffix,
-      level, schema, new SerializableConf(SparkSession.active.sessionState.newHadoopConf()))
+    new VcfSink(o.get("vcfheader"), schema, shardSuffix, o.level,
+      writeTbi = o.flag("writetbi") && o.singleFile && bgzf,
+      // tribble `.idx` co-write: the plain-text counterpart of writeTbi
+      writeIdx = o.flag("writeidx") && o.singleFile && !bgzf)
   }
 }
 
-/** Single-file: headerless parts + `header` part (+ BGZF terminator part for
-  * compressed output) merged in name order (VcfSink.java:27-68). Sharded:
-  * complete plain .vcf per partition (VcfSinkMultiple.java:20-44).
+/** VCF pieces of the shared sink (VcfSink.java:27-68, VcfSinkMultiple.java:20-44):
+  * plain or BGZF parts, a head with the samples the writers saw (unless
+  * `vcfHeader` is given), and the `.tbi`/`.idx` co-writes.
   */
-class VcfBatchWrite(path: String, headerOpt: Option[String], singleFile: Boolean,
-                    bgzf: Boolean, writeTbi: Boolean, writeIdx: Boolean, shardSuffix: String,
-                    level: Int, schema: StructType, conf: SerializableConf) extends BatchWrite {
-  private val tempDir = path + ".parts"
+final class VcfSink(headerOpt: Option[String], val schema: StructType, val shardSuffix: String,
+    override val level: Int, val writeTbi: Boolean, val writeIdx: Boolean) extends SinkCodec[VcfPartReport] {
+  override def newPart(spec: PartSpec): SinkPart[VcfPartReport] = new VcfPart(spec, this)
+  def headText(samples: Seq[String]): Array[Byte] =
+    headerOpt.getOrElse(VcfHeader(Seq("##fileformat=VCFv4.2"), samples).headerText).getBytes("UTF-8")
+  override def head(reports: Seq[VcfPartReport]): Array[Byte] =
+    headText(reports.collectFirst { case r if r.samples.nonEmpty => r.samples }.getOrElse(Seq.empty))
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) {
-      fs.delete(new Path(path), false)
-      fs.delete(new Path(tempDir), true)
-      fs.mkdirs(new Path(tempDir))
-    } else {
-      fs.delete(new Path(path), true)
-      fs.mkdirs(new Path(path))
-    }
-    val dir = if (singleFile) tempDir else path
-    val ho = headerOpt; val sf = singleFile; val bz = bgzf; val c = conf; val sch = schema
-    val tb = writeTbi; val ti = writeIdx; val ss = shardSuffix; val lv = level
-    (partitionId: Int, _: Long) => new VcfDataWriter(dir, ho, sf, bz, tb, ti, ss, lv, sch, c, partitionId)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = if (singleFile) {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    // header from option, or synthesized with samples reported by writers
-    val samples = messages.collectFirst { case m: VcfPartMessage if m.samples.nonEmpty => m.samples }
-      .getOrElse(Seq.empty)
-    val headerText = headerOpt.getOrElse(VcfHeader(Seq("##fileformat=VCFv4.2"), samples).headerText)
-    val ho = fs.create(new Path(tempDir, "header"), true)
-    if (bgzf) {
-      val b = new graft.bgzf.BgzfOutputStream(ho, writeEof = false, level = level)
-      b.write(headerText.getBytes("UTF-8")); b.close()
-    } else { ho.write(headerText.getBytes("UTF-8")); ho.close() }
-    if (bgzf) {
-      val to = fs.create(new Path(tempDir, "terminator"), true)
-      to.write(graft.bgzf.Bgzf.EofBlock)
-      to.close()
-    }
-    // capture part geometry BEFORE the merge consumes the parts dir
-    val headerBytes = fs.getFileStatus(new Path(tempDir, "header")).getLen
-    val parts = messages.collect { case m: VcfPartMessage => m }.sortBy(_.path)
-    val shifts = { var b = headerBytes; parts.map { m => val s = b; b += m.partBytes; s } }
-    HadoopIO.mergeParts(new Path(tempDir), new Path(path), conf.conf)
-    // index co-writes AFTER the merge so their mtime is >= the data file's —
-    // readers treat an index older than its data file as stale (in-place
-    // rewrite guard) and would otherwise reject every fresh co-write
-    if (writeTbi) {
-      // rebase each part's index contribution by the compressed bytes that
-      // precede it after concat; a non-sorted result skips the index
-      graft.index.TbiPartData.mergeSorted(parts.map(_.tbi).toSeq, shifts.toSeq) match {
-        case Some(idx) =>
-          val io = fs.create(new Path(path + ".tbi"), true)
-          graft.index.TbiIndex.write(io, idx)
-          io.close()
-        case None =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"writeTbi: output $path is not coordinate-sorted; skipping .tbi")
+  override def coWrite(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      parts: Seq[SinkPartMessage[VcfPartReport]], shifts: Seq[Long]): Unit = {
+    // each part's index contribution is rebased by the bytes that precede it
+    // after concat (compressed for .tbi, plain for .idx); a non-sorted result
+    // skips the index
+    def skip(option: String, ext: String): Unit = org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"$option: output $path is not coordinate-sorted; skipping $ext")
+    if (writeTbi)
+      graft.index.TbiPartData.mergeSorted(parts.map(_.report.tbi), shifts) match {
+        case Some(idx) => SinkFiles.write(fs, new Path(path + ".tbi"))(graft.index.TbiIndex.write(_, idx))
+        case None => skip("writeTbi", ".tbi")
       }
-    }
-    if (writeIdx) {
-      // rebase each part's byte offsets by the plain bytes preceding it
-      val totalBytes = headerBytes + parts.map(_.partBytes).sum
-      graft.index.TribblePartData.mergeSorted(parts.map(_.idx).toSeq, shifts.toSeq) match {
-        case Some(idx) =>
-          val io = fs.create(new Path(path + ".idx"), true)
-          graft.index.TribbleIdx.write(io, idx, new Path(path).getName, totalBytes)
-          io.close()
-        case None =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"writeIdx: output $path is not coordinate-sorted; skipping .idx")
+    if (writeIdx)
+      graft.index.TribblePartData.mergeSorted(parts.map(_.report.idx), shifts) match {
+        case Some(idx) => SinkFiles.write(fs, new Path(path + ".idx"))(
+          graft.index.TribbleIdx.write(_, idx, new Path(path).getName, shifts.last))
+        case None => skip("writeIdx", ".idx")
       }
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.conf)
-    if (singleFile) fs.delete(new Path(tempDir), true)
   }
 }
 
-/** `partBytes` is the part's on-disk length: compressed bytes for BGZF
-  * parts, plain bytes otherwise — commit uses it to rebase per-part index
-  * offsets to post-concat positions.
-  */
-case class VcfPartMessage(path: String, samples: Seq[String], partBytes: Long,
-    tbi: graft.index.TbiPartData,
-    idx: graft.index.TribblePartData) extends WriterCommitMessage
+case class VcfPartReport(samples: Seq[String], tbi: graft.index.TbiPartData,
+    idx: graft.index.TribblePartData)
 
 /** Byte counter above the write buffer so offsets are exact at write time. */
 private[vcf] final class CountingOutputStream(under: java.io.OutputStream)
@@ -524,44 +455,27 @@ private[vcf] final class CountingOutputStream(under: java.io.OutputStream)
   override def close(): Unit = under.close()
 }
 
-class VcfDataWriter(dir: String, headerOpt: Option[String], singleFile: Boolean, bgzf: Boolean,
-                    writeTbi: Boolean, writeIdx: Boolean, shardSuffix: String, level: Int,
-                    schema: StructType, conf: SerializableConf, partitionId: Int)
-    extends DataWriter[InternalRow] {
-  private val name = if (singleFile) f"part-$partitionId%09d" else f"part-$partitionId%09d$shardSuffix"
-  private val partPath = new Path(dir, name)
-  private val fs = partPath.getFileSystem(conf.conf)
-  private val raw = fs.create(partPath, true)
-  private val shardBgzf = !singleFile && (shardSuffix.endsWith(".gz") || shardSuffix.endsWith(".bgz"))
-  private val bgzfOut: graft.bgzf.BgzfOutputStream =
-    if (singleFile && bgzf) new graft.bgzf.BgzfOutputStream(raw, writeEof = false, level = level)
-    else if (shardBgzf) new graft.bgzf.BgzfOutputStream(raw, writeEof = true, level = level) // complete standalone file
-    else null
-  private val counting: CountingOutputStream =
-    if (bgzfOut == null) new CountingOutputStream(new java.io.BufferedOutputStream(raw, 1 << 16))
-    else null
-  private val out: java.io.OutputStream =
-    if (bgzfOut != null) bgzfOut else counting
+final class VcfPart(spec: PartSpec, sink: VcfSink) extends SinkPart[VcfPartReport](spec, sink) {
+  // writeTbi implies a BGZF single file, writeIdx a plain one
+  private val tbi = if (sink.writeTbi) new graft.index.TbiBuilder else null
+  private val tidx = if (sink.writeIdx) new graft.index.TribbleIdxBuilder() else null
+  private val counting = if (tidx != null) new CountingOutputStream(out) else null
+  private val dst: java.io.OutputStream = if (counting != null) counting else out
   // direct InternalRow → line-bytes encoder (VcfRowEncoder): no per-row
   // Variant/Genotype/String/Map materialization on the hot path; falls back
   // to the RowToVariant spec path for shapes it can't prove byte-identical
-  private val enc = new graft.vcf.VcfRowEncoder(schema)
+  private val enc = new graft.vcf.VcfRowEncoder(sink.schema)
   private var samples: Seq[String] = Seq.empty
-  private var wroteShardHeader = false
-  private val tbi = if (writeTbi && bgzfOut != null) new graft.index.TbiBuilder else null
-  private val tidx = if (writeIdx && singleFile && bgzfOut == null) new graft.index.TribbleIdxBuilder() else null
+  // a shard's header carries the samples of its first row
+  private var wroteShardHeader = !sharded
 
   override def write(row: InternalRow): Unit = {
     val len = enc.encode(row)
     if (samples.isEmpty && enc.lastHasGenotypes) samples = enc.samplesOf(row)
-    if (!singleFile && !wroteShardHeader) {
-      val text = headerOpt.getOrElse(VcfHeader(Seq("##fileformat=VCFv4.2"), samples).headerText)
-      out.write(text.getBytes("UTF-8"))
-      wroteShardHeader = true
-    }
+    if (!wroteShardHeader) { dst.write(sink.headText(samples)); wroteShardHeader = true }
     val vBeg = if (tbi != null) bgzfOut.virtualOffset else 0L
     val pBeg = if (tidx != null) counting.count else 0L
-    out.write(enc.buf, 0, len)
+    dst.write(enc.buf, 0, len)
     if (tbi != null)
       tbi.add(enc.lastContig, enc.lastStart - 1, math.max(enc.lastStart, enc.lastEnd) - 1,
         vBeg, bgzfOut.virtualOffset)
@@ -569,19 +483,12 @@ class VcfDataWriter(dir: String, headerOpt: Option[String], singleFile: Boolean,
       tidx.add(enc.lastContig, enc.lastStart, math.max(enc.lastStart, enc.lastEnd),
         pBeg, counting.count)
   }
-  override def commit(): WriterCommitMessage = {
-    if (!singleFile && !wroteShardHeader) {
-      val text = headerOpt.getOrElse(VcfHeader.Minimal.headerText)
-      out.write(text.getBytes("UTF-8"))
-    }
-    out.close()
-    VcfPartMessage(partPath.toString, samples,
-      if (bgzfOut != null) graft.bgzf.Bgzf.blockStart(bgzfOut.virtualOffset) else counting.count,
+  override protected def finish(): VcfPartReport = {
+    if (!wroteShardHeader) dst.write(sink.headText(Nil))
+    VcfPartReport(samples,
       if (tbi != null) tbi.result() else null,
       if (tidx != null) tidx.result() else null)
   }
-  override def abort(): Unit = { out.close(); fs.delete(partPath, false) }
-  override def close(): Unit = ()
 }
 
 /** InternalRow → Variant (write side). */

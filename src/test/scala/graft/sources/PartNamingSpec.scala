@@ -3,17 +3,17 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Single-file sinks merge part files in lexicographic name order and rebase
-  * index offsets by the same order (e.g. BamDataSource commit sorts by
-  * message path). That is only correct while lexicographic order equals
-  * numeric partition order, so the part-name zero-pad width must exceed any
-  * plausible task count. All four sinks (BAM/SAM/VCF/CRAM) use width 9
-  * (`part-%09d`) — this spec pins the invariant at 6+ digit ids, where the
-  * reference's 5-digit convention (AnySamSinkMultiple.java) would interleave
-  * ("part-100000" sorts before "part-99999").
+  * index offsets by the same order ([[FormatSink]] commit sorts by message
+  * path). That is only correct while lexicographic order equals numeric
+  * partition order, so the part-name zero-pad width must exceed any
+  * plausible task count. Every sink (BAM/SAM/VCF/FASTQ/CRAM) names its parts
+  * with [[SinkFiles.partName]] — this spec pins the invariant at 6+ digit
+  * ids, where the reference's 5-digit convention (AnySamSinkMultiple.java)
+  * would interleave ("part-100000" sorts before "part-99999").
   */
 class PartNamingSpec extends AnyFunSuite {
 
-  private def partName(id: Int): String = f"part-$id%09d"
+  import SinkFiles.partName
 
   test("lexicographic part order equals numeric order past 99,999 partitions") {
     val ids = Seq(0, 1, 9, 99998, 99999, 100000, 100001, 999999, 1000000, 123456789)
@@ -22,7 +22,7 @@ class PartNamingSpec extends AnyFunSuite {
   }
 
   test("header < part-* < terminator lexicographic merge invariant") {
-    val names = Seq("header", partName(0), partName(100000), "terminator")
+    val names = Seq(SinkFiles.Header, partName(0), partName(100000), SinkFiles.Terminator)
     assert(names.sorted == names)
   }
 
