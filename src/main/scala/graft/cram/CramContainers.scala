@@ -17,18 +17,31 @@ import graft.bgzf.SeekableInput
   */
 object Itf8 {
   /** Read an ITF-8 signed 32-bit int; returns (value, bytesConsumed). */
-  def read(buf: Array[Byte], off: Int): (Int, Int) = {
+  def read(buf: Array[Byte], off: Int): (Int, Int) = (value(buf, off), size(buf(off)))
+
+  /** Byte length of the ITF-8 int whose first byte is `first`. */
+  def size(first: Byte): Int = {
+    val b1 = first & 0xff
+    if ((b1 & 0x80) == 0) 1
+    else if ((b1 & 0x40) == 0) 2
+    else if ((b1 & 0x20) == 0) 3
+    else if ((b1 & 0x10) == 0) 4
+    else 5
+  }
+
+  /** The ITF-8 int at `off`, [[size]] bytes long. */
+  def value(buf: Array[Byte], off: Int): Int = {
     val b1 = buf(off) & 0xff
-    if ((b1 & 0x80) == 0) (b1, 1)
+    if ((b1 & 0x80) == 0) b1
     else if ((b1 & 0x40) == 0)
-      (((b1 & 0x7f) << 8) | (buf(off + 1) & 0xff), 2)
+      ((b1 & 0x7f) << 8) | (buf(off + 1) & 0xff)
     else if ((b1 & 0x20) == 0)
-      (((b1 & 0x3f) << 16) | ((buf(off + 1) & 0xff) << 8) | (buf(off + 2) & 0xff), 3)
+      ((b1 & 0x3f) << 16) | ((buf(off + 1) & 0xff) << 8) | (buf(off + 2) & 0xff)
     else if ((b1 & 0x10) == 0)
-      (((b1 & 0x1f) << 24) | ((buf(off + 1) & 0xff) << 16) | ((buf(off + 2) & 0xff) << 8) | (buf(off + 3) & 0xff), 4)
+      ((b1 & 0x1f) << 24) | ((buf(off + 1) & 0xff) << 16) | ((buf(off + 2) & 0xff) << 8) | (buf(off + 3) & 0xff)
     else
-      (((b1 & 0x0f) << 28) | ((buf(off + 1) & 0xff) << 20) | ((buf(off + 2) & 0xff) << 12) |
-        ((buf(off + 3) & 0xff) << 4) | (buf(off + 4) & 0x0f), 5)
+      ((b1 & 0x0f) << 28) | ((buf(off + 1) & 0xff) << 20) | ((buf(off + 2) & 0xff) << 12) |
+        ((buf(off + 3) & 0xff) << 4) | (buf(off + 4) & 0x0f)
   }
 
   /** Encode an ITF-8 int (htsjdk-compatible byte shapes). */

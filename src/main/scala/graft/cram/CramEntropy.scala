@@ -53,115 +53,177 @@ final class BitWriter {
   }
 }
 
-/** Positioned views over a slice's external blocks, keyed by content id.
-  * `resolve` may decompress lazily — a stream never read is a block never
-  * inflated (the whole point of the record-level field projection) — so
-  * resolved buffers are memoized here.
+/** One external block's read cursor within a slice: the block's bytes and
+  * the read position. The bytes are fetched from `resolve` on the first
+  * read, so a block that is never read is never inflated. Every codec bound
+  * to the same content id reads through the same cursor, which keeps values
+  * interleaved in a shared block in step.
+  */
+final class ExtCursor private[cram] (val cid: Int, resolve: Int => Option[Array[Byte]]) {
+  private var buf: Array[Byte] = null
+  private var pos = 0
+
+  private def bytes: Array[Byte] = {
+    if (buf == null)
+      buf = resolve(cid).getOrElse(throw new IOException(s"CRAM external block $cid missing"))
+    buf
+  }
+
+  private def exhausted(): Nothing = throw new IOException(s"CRAM external block $cid exhausted")
+
+  def readByte(): Int = {
+    val b = bytes
+    val p = pos
+    if (p >= b.length) exhausted()
+    pos = p + 1
+    b(p) & 0xff
+  }
+
+  /** One ITF-8 int, bounds-checked against the block end (a value cut off
+    * by the end of the block is a truncated block, not a short value).
+    */
+  def readItf8(): Int = {
+    val b = bytes
+    val p = pos
+    if (p >= b.length) exhausted()
+    val n = Itf8.size(b(p))
+    if (p + n > b.length) exhausted()
+    pos = p + n
+    Itf8.value(b, p)
+  }
+
+  /** `n` raw bytes into `dst` at `off`: the bulk face of n×[[readByte]]
+    * (so, like it, a zero-length read touches no block).
+    */
+  def readBytes(dst: Array[Byte], off: Int, n: Int): Unit = if (n != 0) {
+    val b = bytes
+    val p = pos
+    if (n < 0 || p + n > b.length)
+      throw new IOException(s"CRAM external block $cid exhausted (read $n at $p of ${b.length})")
+    System.arraycopy(b, p, dst, off, n)
+    pos = p + n
+  }
+
+  /** Advance `n` raw bytes (the skip face of n×[[readByte]]), bounds-checked. */
+  def skipBytes(n: Int): Unit = {
+    val b = bytes
+    val p = pos
+    if (n < 0 || p + n > b.length)
+      throw new IOException(s"CRAM external block $cid exhausted (skip $n at $p of ${b.length})")
+    pos = p + n
+  }
+
+  /** Index of the next `stop` byte. A BYTE_ARRAY_STOP value always ends
+    * with it; reaching the block end first is a structural error (truncated
+    * or corrupt block): returning the tail would hand one field the rest of
+    * the block and surface only as an opaque failure on the NEXT record.
+    */
+  private def stopAt(stop: Int): Int = {
+    val b = bytes
+    var q = pos
+    while (q < b.length && (b(q) & 0xff) != stop) q += 1
+    if (q >= b.length)
+      throw new IOException(
+        f"CRAM external block $cid missing stop byte 0x$stop%02x (read from $pos, block length ${b.length})")
+    q
+  }
+
+  def readUntil(stop: Int): Array[Byte] = {
+    val q = stopAt(stop)
+    val out = java.util.Arrays.copyOfRange(buf, pos, q)
+    pos = q + 1 // consume the stop byte
+    out
+  }
+
+  /** [[readUntil]]'s stream advancement without the copy: the consume path
+    * for values that exist only to keep a shared stream in sync.
+    */
+  def skipUntil(stop: Int): Unit = pos = stopAt(stop) + 1
+}
+
+/** A slice's external streams: one [[ExtCursor]] per content id, handed out
+  * when codecs are bound. The id lookup happens at bind time only; a bound
+  * codec reads through its cursor.
   */
 final class ExtStreams(resolve: Int => Option[Array[Byte]],
                        /** Test seam: observes every byte-array VALUE
                          * materialization (length) on the external-stream read
                          * paths, so a spec can prove consumed-but-unwanted
                          * values are position-skipped, never copied. Reader-
-                         * local (one ExtStreams per slice decode) — null in
+                         * local (one ExtStreams per slice decode): null in
                          * production, a plain field read in the hot loop.
                          */
                        private[cram] val probe: Int => Unit = null) {
-  def this(blocks: Map[Int, Array[Byte]]) = this(blocks.get _)
+  private val cursors = scala.collection.mutable.HashMap.empty[Int, ExtCursor]
 
-  private val cache = scala.collection.mutable.Map.empty[Int, Array[Byte]]
-  private val pos = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
+  def cursor(cid: Int): ExtCursor = cursors.getOrElseUpdate(cid, new ExtCursor(cid, resolve))
+}
 
-  private def buf(cid: Int): Array[Byte] =
-    cache.getOrElseUpdate(cid,
-      resolve(cid).getOrElse(throw new IOException(s"CRAM external block $cid missing")))
+/** A codec bound to one slice's core bit-stream and external cursors: the
+  * form the record loop reads values through. Series types decide which
+  * read is legal; mismatches are structural errors in the file.
+  */
+abstract class SeriesReader(codec: CCodec) {
+  def readInt(): Int = throw new IOException(s"codec $codec cannot produce ints")
+  def readByte(): Int = throw new IOException(s"codec $codec cannot produce bytes")
+  def readArray(): Array[Byte] = throw new IOException(s"codec $codec cannot produce byte arrays")
 
-  def readItf8(cid: Int): Int = {
-    val b = buf(cid)
-    val p = pos(cid)
-    val (v, n) = Itf8.read(b, p)
-    pos(cid) = p + n
-    v
-  }
-
-  def readByte(cid: Int): Int = {
-    val b = buf(cid)
-    val p = pos(cid)
-    if (p >= b.length) throw new IOException(s"CRAM external block $cid exhausted")
-    pos(cid) = p + 1
-    b(p) & 0xff
-  }
-
-  def readUntil(cid: Int, stop: Int): Array[Byte] = {
-    val b = buf(cid)
-    val p = pos(cid)
-    var q = p
-    while (q < b.length && (b(q) & 0xff) != stop) q += 1
-    // a BYTE_ARRAY_STOP value always terminates with the stop byte; hitting
-    // end-of-block first is a structural error (truncated/corrupt block) —
-    // returning the tail would silently hand one field the rest of the
-    // block and surface only as an opaque failure on the NEXT record
-    if (q >= b.length)
-      throw new IOException(
-        f"CRAM external block $cid missing stop byte 0x$stop%02x (read from $p, block length ${b.length})")
-    pos(cid) = q + 1 // consume the stop byte
-    if (probe != null) probe(q - p)
-    java.util.Arrays.copyOfRange(b, p, q)
-  }
-
-  /** [[readUntil]]'s stream advancement without the copy — the consume path
-    * for values that exist only to keep a shared stream in sync.
+  /** Advance every stream exactly as [[readArray]] would, materializing
+    * nothing: the consume path for gated-but-unskippable values (kept only
+    * to hold shared streams in sync). Default: read and discard; external
+    * codecs override with a pure position skip.
     */
-  def skipUntil(cid: Int, stop: Int): Unit = {
-    val b = buf(cid)
-    val p = pos(cid)
-    var q = p
-    while (q < b.length && (b(q) & 0xff) != stop) q += 1
-    if (q >= b.length)
-      throw new IOException(
-        f"CRAM external block $cid missing stop byte 0x$stop%02x (read from $p, block length ${b.length})")
-    pos(cid) = q + 1
+  def skipArray(): Unit = { readArray(); () }
+
+  /** `n` successive [[readByte]] values into `dst` at `off`. */
+  def readBytes(dst: Array[Byte], off: Int, n: Int): Unit = {
+    var i = 0
+    while (i < n) { dst(off + i) = readByte().toByte; i += 1 }
   }
 
-  /** Advance `n` raw bytes (the skip face of n×readByte), bounds-checked. */
-  def skipBytes(cid: Int, n: Int): Unit = {
-    val b = buf(cid)
-    val p = pos(cid)
-    if (n < 0 || p + n > b.length)
-      throw new IOException(s"CRAM external block $cid exhausted (skip $n at $p of ${b.length})")
-    pos(cid) = p + n
+  /** Advance as `n` successive [[readByte]] calls would. */
+  def skipBytes(n: Int): Unit = {
+    var i = 0
+    while (i < n) { readByte(); i += 1 }
   }
 }
 
-/** One parsed encoding = a value codec. Series types decide which read is
-  * legal; mismatches are structural errors in the file.
+object SeriesReader {
+  /** Stands in for a series or tag the compression header does not declare:
+    * binding succeeds, and the first value read raises `message`.
+    */
+  def missing(message: String): SeriesReader = new SeriesReader(null) {
+    override def readInt(): Int = throw new IOException(message)
+    override def readByte(): Int = throw new IOException(message)
+    override def readArray(): Array[Byte] = throw new IOException(message)
+  }
+}
+
+/** One parsed encoding = a value codec, shared by every slice of a
+  * container; [[bind]] turns it into a [[SeriesReader]] over one slice's
+  * streams.
   */
 sealed trait CCodec {
-  def readInt(bits: BitReader, ext: ExtStreams): Int =
-    throw new IOException(s"codec $this cannot produce ints")
-  def readByte(bits: BitReader, ext: ExtStreams): Int =
-    throw new IOException(s"codec $this cannot produce bytes")
-  def readArray(bits: BitReader, ext: ExtStreams): Array[Byte] =
-    throw new IOException(s"codec $this cannot produce byte arrays")
-  /** Which streams a read consumes — the skip-eligibility signal for field
-    * projection: a series is skippable only if it never touches the shared
+  def bind(bits: BitReader, ext: ExtStreams): SeriesReader
+  /** Which streams a read consumes: the skip-eligibility signal for field
+    * projection. A series is skippable only if it never touches the shared
     * core bit-stream and its external blocks are exclusively its own.
     */
   def usesCore: Boolean
   def extIds: Set[Int]
-
-  /** Advance every stream exactly as [[readArray]] would, materializing
-    * nothing — the consume path for gated-but-unskippable values (kept only
-    * to hold shared streams in sync). Default: read and discard; external
-    * codecs override with a pure position skip.
-    */
-  def skipArray(bits: BitReader, ext: ExtStreams): Unit = { readArray(bits, ext); () }
 }
 
 /** EXTERNAL (id 1): ITF-8 ints / raw bytes from block `cid`. */
 final case class CExternal(cid: Int) extends CCodec {
-  override def readInt(bits: BitReader, ext: ExtStreams): Int = ext.readItf8(cid)
-  override def readByte(bits: BitReader, ext: ExtStreams): Int = ext.readByte(cid)
+  override def bind(bits: BitReader, ext: ExtStreams): SeriesReader = {
+    val cur = ext.cursor(cid)
+    new SeriesReader(this) {
+      override def readInt(): Int = cur.readItf8()
+      override def readByte(): Int = cur.readByte()
+      override def readBytes(dst: Array[Byte], off: Int, n: Int): Unit = cur.readBytes(dst, off, n)
+      override def skipBytes(n: Int): Unit = cur.skipBytes(n)
+    }
+  }
   override def usesCore: Boolean = false
   override def extIds: Set[Int] = Set(cid)
 }
@@ -188,7 +250,7 @@ final case class CHuffman(syms: Array[Int], lens: Array[Int]) extends CCodec {
     (cl, cd, vs)
   }
 
-  override def readInt(bits: BitReader, ext: ExtStreams): Int = {
+  private def decode(bits: BitReader): Int = {
     if (single) return syms(0)
     var len = 0
     var code = 0
@@ -204,28 +266,35 @@ final case class CHuffman(syms: Array[Int], lens: Array[Int]) extends CCodec {
     }
     0 // unreachable
   }
-  override def readByte(bits: BitReader, ext: ExtStreams): Int = readInt(bits, ext)
+  override def bind(bits: BitReader, ext: ExtStreams): SeriesReader = new SeriesReader(this) {
+    override def readInt(): Int = decode(bits)
+    override def readByte(): Int = decode(bits)
+  }
   override def usesCore: Boolean = !single // a zero-length single consumes nothing
   override def extIds: Set[Int] = Set.empty
 }
 
 /** BETA (id 6): fixed-width `nbits` minus `offset`. */
 final case class CBeta(offset: Int, nbits: Int) extends CCodec {
-  override def readInt(bits: BitReader, ext: ExtStreams): Int = bits.readBits(nbits) - offset
-  override def readByte(bits: BitReader, ext: ExtStreams): Int = readInt(bits, ext)
+  override def bind(bits: BitReader, ext: ExtStreams): SeriesReader = new SeriesReader(this) {
+    override def readInt(): Int = bits.readBits(nbits) - offset
+    override def readByte(): Int = readInt()
+  }
   override def usesCore: Boolean = nbits > 0
   override def extIds: Set[Int] = Set.empty
 }
 
 /** GAMMA (id 9): Elias gamma minus `offset`. */
 final case class CGamma(offset: Int) extends CCodec {
-  override def readInt(bits: BitReader, ext: ExtStreams): Int = {
-    var n = 0
-    while (bits.readBit() == 0) { n += 1; if (n > 31) throw new IOException("bad gamma code") }
-    var v = 1
-    var i = 0
-    while (i < n) { v = (v << 1) | bits.readBit(); i += 1 }
-    v - offset
+  override def bind(bits: BitReader, ext: ExtStreams): SeriesReader = new SeriesReader(this) {
+    override def readInt(): Int = {
+      var n = 0
+      while (bits.readBit() == 0) { n += 1; if (n > 31) throw new IOException("bad gamma code") }
+      var v = 1
+      var i = 0
+      while (i < n) { v = (v << 1) | bits.readBit(); i += 1 }
+      v - offset
+    }
   }
   override def usesCore: Boolean = true
   override def extIds: Set[Int] = Set.empty
@@ -233,13 +302,15 @@ final case class CGamma(offset: Int) extends CCodec {
 
 /** SUBEXP (id 7): sub-exponential with parameter `k`, minus `offset`. */
 final case class CSubExp(offset: Int, k: Int) extends CCodec {
-  override def readInt(bits: BitReader, ext: ExtStreams): Int = {
-    var n = 0
-    while (bits.readBit() == 1) { n += 1; if (n > 31) throw new IOException("bad subexp code") }
-    val u =
-      if (n == 0) bits.readBits(k)
-      else (1 << (k + n - 1)) | bits.readBits(k + n - 1)
-    u - offset
+  override def bind(bits: BitReader, ext: ExtStreams): SeriesReader = new SeriesReader(this) {
+    override def readInt(): Int = {
+      var n = 0
+      while (bits.readBit() == 1) { n += 1; if (n > 31) throw new IOException("bad subexp code") }
+      val u =
+        if (n == 0) bits.readBits(k)
+        else (1 << (k + n - 1)) | bits.readBits(k + n - 1)
+      u - offset
+    }
   }
   override def usesCore: Boolean = true
   override def extIds: Set[Int] = Set.empty
@@ -247,21 +318,26 @@ final case class CSubExp(offset: Int, k: Int) extends CCodec {
 
 /** BYTE_ARRAY_LEN (id 4): nested length codec + per-byte value codec. */
 final case class CByteArrayLen(lenCodec: CCodec, valCodec: CCodec) extends CCodec {
-  override def readArray(bits: BitReader, ext: ExtStreams): Array[Byte] = {
-    val n = lenCodec.readInt(bits, ext)
-    if (n < 0) throw new IOException(s"negative byte array length $n")
-    if (ext.probe != null) ext.probe(n)
-    val out = new Array[Byte](n)
-    var i = 0
-    while (i < n) { out(i) = valCodec.readByte(bits, ext).toByte; i += 1 }
-    out
-  }
-  override def skipArray(bits: BitReader, ext: ExtStreams): Unit = {
-    val n = lenCodec.readInt(bits, ext) // length still decoded (it drives the skip)
-    if (n < 0) throw new IOException(s"negative byte array length $n")
-    valCodec match {
-      case CExternal(cid) => ext.skipBytes(cid, n) // pure position skip
-      case vc => var i = 0; while (i < n) { vc.readByte(bits, ext); i += 1 }
+  override def bind(bits: BitReader, ext: ExtStreams): SeriesReader = {
+    val lenR = lenCodec.bind(bits, ext)
+    val valR = valCodec.bind(bits, ext)
+    val probe = ext.probe
+    new SeriesReader(this) {
+      private def length(): Int = {
+        val n = lenR.readInt()
+        if (n < 0) throw new IOException(s"negative byte array length $n")
+        n
+      }
+      override def readArray(): Array[Byte] = {
+        val n = length()
+        if (probe != null) probe(n)
+        val out = new Array[Byte](n)
+        valR.readBytes(out, 0, n)
+        out
+      }
+      // the length is still decoded (it drives the skip); an external value
+      // stream is a pure position skip
+      override def skipArray(): Unit = valR.skipBytes(length())
     }
   }
   override def usesCore: Boolean = lenCodec.usesCore || valCodec.usesCore
@@ -270,8 +346,18 @@ final case class CByteArrayLen(lenCodec: CCodec, valCodec: CCodec) extends CCode
 
 /** BYTE_ARRAY_STOP (id 5): bytes from block `cid` until `stop`. */
 final case class CByteArrayStop(stop: Int, cid: Int) extends CCodec {
-  override def readArray(bits: BitReader, ext: ExtStreams): Array[Byte] = ext.readUntil(cid, stop)
-  override def skipArray(bits: BitReader, ext: ExtStreams): Unit = ext.skipUntil(cid, stop)
+  override def bind(bits: BitReader, ext: ExtStreams): SeriesReader = {
+    val cur = ext.cursor(cid)
+    val probe = ext.probe
+    new SeriesReader(this) {
+      override def readArray(): Array[Byte] = {
+        val out = cur.readUntil(stop)
+        if (probe != null) probe(out.length)
+        out
+      }
+      override def skipArray(): Unit = cur.skipUntil(stop)
+    }
+  }
   override def usesCore: Boolean = false
   override def extIds: Set[Int] = Set(cid)
 }

@@ -1,6 +1,7 @@
 package graft.cram
 
 import java.io.IOException
+import java.nio.charset.StandardCharsets
 import graft.bam.{AlignmentRecord, SamHeader}
 
 /** CRAM record-layer decode (hts-specs CRAM v3.0 §8–10; CRAM v2.1 for the
@@ -288,7 +289,67 @@ object CramRecordCodec {
     case 'A' => 0; case 'C' => 1; case 'G' => 2; case 'T' => 3; case _ => 4
   }
 
-  private final case class Feature(pos: Int, code: Char, intVal: Int, bytes: Array[Byte])
+  /** One slice's read features, column-wise in decode order: record `i`'s
+    * features are entries `[first(i), first(i + 1))`.
+    */
+  private final class Features(nRecords: Int) {
+    val first = new Array[Int](nRecords + 1)
+    var n = 0
+    var pos = new Array[Int](256)
+    var code = new Array[Char](256)
+    var intVal = new Array[Int](256)
+    var bytes = new Array[Array[Byte]](256)
+
+    def add(p: Int, c: Char, v: Int, b: Array[Byte]): Unit = {
+      if (n == pos.length) {
+        val cap = n * 2
+        pos = java.util.Arrays.copyOf(pos, cap)
+        code = java.util.Arrays.copyOf(code, cap)
+        intVal = java.util.Arrays.copyOf(intVal, cap)
+        bytes = java.util.Arrays.copyOf(bytes, cap)
+      }
+      pos(n) = p; code(n) = c; intVal(n) = v; bytes(n) = b
+      n += 1
+    }
+  }
+
+  /** A decoded record before mate resolution (which needs the whole slice);
+    * `bases` holds an unmapped record's sequence, `quals` raw phred values.
+    */
+  private final class Raw(val bf: Int, val cf: Int, val rid: Int, val rl: Int, val start: Int,
+                          val name: String, val mf: Int, val nfDist: Int,
+                          val attrs: Map[String, String], val mq: Int,
+                          val bases: Array[Byte], val quals: Array[Byte])
+
+  /** One tag-dictionary line bound for a slice: per tag, its name, type,
+    * reader, and what the record loop does with the value.
+    */
+  private final class TagLine(val names: Array[String], val types: Array[Char],
+                              val readers: Array[SeriesReader], val actions: Array[Int])
+  private final val TagRead = 0 // decode into the attributes
+  private final val TagSkip = 1 // advance shared streams, copy nothing
+  private final val TagLeave = 2 // exclusive blocks stay compressed, untouched
+
+  /** CIGAR text built op by op, merging adjacent runs of the same op. */
+  private final class CigarBuilder {
+    private val sb = new java.lang.StringBuilder(32)
+    private var op = ' '
+    private var len = 0
+
+    def emit(o: Char, n: Int): Unit =
+      if (n > 0) {
+        if (len > 0 && o == op) len += n
+        else { flush(); op = o; len = n }
+      }
+    private def flush(): Unit = if (len > 0) sb.append(len).append(op)
+
+    def result(): String = {
+      flush()
+      val s = if (sb.length == 0) "*" else sb.toString
+      sb.setLength(0); len = 0
+      s
+    }
+  }
 
   /** Fixpoint closure of the needed-external-block set over consumed gated
     * codecs: any gated codec that is non-skippable (uses core bits, or
@@ -426,159 +487,171 @@ object CramRecordCodec {
           "pass the fasta option (indexed FASTA with a .fai sidecar)")
     val refBase1 = sh.start // refWindow(0) is reference position sh.start (1-based)
 
-    def series(key: String): CCodec =
-      ch.series.getOrElse(key, throw new IOException(s"CRAM data series $key missing"))
+    // ---- bind once per slice ------------------------------------------
+    // Every series and tag codec the record loop reads resolves here to a
+    // reader over this slice's streams, so a value read in the loop is a
+    // field load and a cursor bump, never a map lookup. Binding reads
+    // nothing: blocks still inflate on their first read. A series the
+    // header omits fails on its first read, so a slice that never reads it
+    // (RI outside multi-ref slices, say) still decodes.
+    def bind(key: String): SeriesReader = ch.series.get(key) match {
+      case Some(c) => c.bind(bits, streams)
+      case None => SeriesReader.missing(s"CRAM data series $key missing")
+    }
+    val bfR = bind("BF"); val cfR = bind("CF"); val riR = bind("RI"); val rlR = bind("RL")
+    val apR = bind("AP"); val rgR = bind("RG"); val rnR = bind("RN"); val mfR = bind("MF")
+    val nsR = bind("NS"); val npR = bind("NP"); val tsR = bind("TS"); val nfR = bind("NF")
+    val tlR = bind("TL"); val fnR = bind("FN"); val fcR = bind("FC"); val fpR = bind("FP")
+    val bsR = bind("BS"); val scR = bind("SC"); val inR = bind("IN"); val baR = bind("BA")
+    val bbR = bind("BB"); val qqR = bind("QQ"); val dlR = bind("DL"); val rsR = bind("RS")
+    val hcR = bind("HC"); val pdR = bind("PD"); val qsR = bind("QS"); val mqR = bind("MQ")
+    val tagLines: Array[TagLine] = ch.tagDict.iterator.map { line =>
+      val n = line.length
+      val names = new Array[String](n)
+      val types = new Array[Char](n)
+      val readers = new Array[SeriesReader](n)
+      val actions = new Array[Int](n)
+      var t = 0
+      while (t < n) {
+        val (tag, typ) = line(t)
+        val key = (tag.charAt(0).toInt << 16) | (tag.charAt(1).toInt << 8) | typ.toInt
+        names(t) = tag; types(t) = typ
+        ch.tagCodecs.get(key) match {
+          case Some(c) =>
+            readers(t) = c.bind(bits, streams)
+            actions(t) = if (tagWanted(tag)) TagRead else if (!tagSkippable(key)) TagSkip else TagLeave
+          case None => // a record carrying this line fails on the tag
+            readers(t) = SeriesReader.missing(s"tag codec missing for $tag:$typ")
+            actions(t) = TagSkip
+        }
+        t += 1
+      }
+      new TagLine(names, types, readers, actions)
+    }.toArray
+    val rgAttrs: Array[String] = rgIds.iterator.map("Z:" + _).toArray
 
+    val nRec = sh.nRecords
+    val feats = new Features(nRec)
     var prevStart = sh.start
-    // decoded but unresolved: mate links need the whole slice
-    final case class Raw(bf: Int, cf: Int, rid: Int, rl: Int, start: Int, rg: Int,
-                         name: String, mf: Int, mateRid: Int, matePos: Int, tlen: Int,
-                         nfDist: Int, attrs: List[(String, String)],
-                         features: List[Feature], mq: Int, quals: Array[Byte])
-    val raws = new Array[Raw](sh.nRecords)
+    val raws = new Array[Raw](nRec)
+    // mate fields as stored; next-fragment links are resolved after the loop
+    val mRid = new Array[Int](nRec)
+    val mPos = new Array[Int](nRec)
+    val mTlen = new Array[Int](nRec)
     var i = 0
-    while (i < sh.nRecords) {
-      val bf = series("BF").readInt(bits, streams)
-      val cf = series("CF").readInt(bits, streams)
-      val rid = if (sh.refSeqId == -2) series("RI").readInt(bits, streams) else sh.refSeqId
-      val rl = series("RL").readInt(bits, streams)
+    while (i < nRec) {
+      val bf = bfR.readInt()
+      val cf = cfR.readInt()
+      val rid = if (sh.refSeqId == -2) riR.readInt() else sh.refSeqId
+      val rl = rlR.readInt()
       val start =
-        if (ch.apDelta) { val s = prevStart + series("AP").readInt(bits, streams); prevStart = s; s }
-        else series("AP").readInt(bits, streams)
-      val rg = series("RG").readInt(bits, streams)
+        if (ch.apDelta) { val s = prevStart + apR.readInt(); prevStart = s; s }
+        else apR.readInt()
+      val rg = rgR.readInt()
       var name: String = null
       if (ch.rnPreserved) {
         // readName pruned: an exclusive RN block is never inflated; a shared
         // one is position-skipped to keep streams in sync
-        if (wantName) name = new String(series("RN").readArray(bits, streams), "UTF-8")
-        else if (readRN) series("RN").skipArray(bits, streams)
+        if (wantName) name = new String(rnR.readArray(), StandardCharsets.UTF_8)
+        else if (readRN) rnR.skipArray()
       }
-      var mf = 0; var mateRid = -1; var matePos = 0; var tlen = 0; var nfDist = -1
+      var mf = 0; var nfDist = -1
+      mRid(i) = -1
       if ((cf & 0x2) != 0) { // detached
-        mf = series("MF").readInt(bits, streams)
+        mf = mfR.readInt()
         if (!ch.rnPreserved) {
-          if (wantName) name = new String(series("RN").readArray(bits, streams), "UTF-8")
-          else if (readRN) series("RN").skipArray(bits, streams)
+          if (wantName) name = new String(rnR.readArray(), StandardCharsets.UTF_8)
+          else if (readRN) rnR.skipArray()
         }
-        mateRid = series("NS").readInt(bits, streams)
-        matePos = series("NP").readInt(bits, streams)
-        tlen = series("TS").readInt(bits, streams)
+        mRid(i) = nsR.readInt()
+        mPos(i) = npR.readInt()
+        mTlen(i) = tsR.readInt()
       } else if ((cf & 0x4) != 0) {
-        nfDist = series("NF").readInt(bits, streams)
+        nfDist = nfR.readInt()
       }
-      val tl = series("TL").readInt(bits, streams)
-      var attrs: List[(String, String)] = Nil
-      if (ch.tagDict.nonEmpty) {
-        if (tl < 0 || tl >= ch.tagDict.length)
+      val tl = tlR.readInt()
+      val attrs = Map.newBuilder[String, String]
+      if (tagLines.length > 0) {
+        if (tl < 0 || tl >= tagLines.length)
           throw new IOException(s"tag-dictionary line $tl out of range")
-        ch.tagDict(tl).foreach { case (tag, typ) =>
-          val key = (tag.charAt(0).toInt << 16) | (tag.charAt(1).toInt << 8) | typ.toInt
-          val codec = ch.tagCodecs.getOrElse(key,
-            throw new IOException(s"tag codec missing for $tag:$typ"))
-          if (tagWanted(tag)) {
-            val raw = codec.readArray(bits, streams)
-            attrs = (tag -> CramTagValues.binaryToTyped(typ, raw)) :: attrs
-          } else if (!tagSkippable(key)) {
-            // keep shared streams in sync: positions advance, nothing copied
-            codec.skipArray(bits, streams)
-          } // else: exclusive tag blocks stay compressed, untouched
+        val line = tagLines(tl)
+        var t = 0
+        while (t < line.readers.length) {
+          line.actions(t) match {
+            case TagRead =>
+              attrs += line.names(t) -> CramTagValues.binaryToTyped(line.types(t), line.readers(t).readArray())
+            case TagSkip => line.readers(t).skipArray()
+            case _ =>
+          }
+          t += 1
         }
       }
-      var features: List[Feature] = Nil
+      if (rg >= 0 && rg < rgAttrs.length) attrs += "RG" -> rgAttrs(rg)
+      feats.first(i) = feats.n
       var mq = 0
-      var quals: Array[Byte] = null
+      var bases: Array[Byte] = null
       if ((bf & 0x4) == 0) { // mapped
-        val fn = series("FN").readInt(bits, streams)
+        val fn = fnR.readInt()
         var fpos = 0
         var f = 0
         while (f < fn) {
-          val fc = series("FC").readByte(bits, streams).toChar
-          fpos += series("FP").readInt(bits, streams)
-          val feat = fc match {
-            case 'X' => Feature(fpos, 'X', series("BS").readByte(bits, streams), null)
-            case 'S' => Feature(fpos, 'S', 0, series("SC").readArray(bits, streams))
-            case 'I' => Feature(fpos, 'I', 0, series("IN").readArray(bits, streams))
+          val fc = fcR.readByte().toChar
+          fpos += fpR.readInt()
+          fc match {
+            case 'X' => feats.add(fpos, 'X', bsR.readByte(), null)
+            case 'S' => feats.add(fpos, 'S', 0, scR.readArray())
+            case 'I' => feats.add(fpos, 'I', 0, inR.readArray())
             case 'i' =>
               // single-base insertion: cigar length is fixed (1), so the
               // base itself is seq-only and gated
-              val ba = if (readBA) series("BA").readByte(bits, streams) else 'N'.toInt
-              Feature(fpos, 'i', 0, Array(ba.toByte))
-            case 'b' => Feature(fpos, 'b', 0, series("BB").readArray(bits, streams))
+              val ba = if (readBA) baR.readByte() else 'N'.toInt
+              feats.add(fpos, 'i', 0, Array(ba.toByte))
+            case 'b' => feats.add(fpos, 'b', 0, bbR.readArray())
             case 'q' =>
-              // quality run: no seq/cigar effect — value gated; a consumed-
+              // quality run: no seq/cigar effect, value gated; a consumed-
               // but-unwanted run is position-skipped, never copied
               val qq =
-                if (wantQual) series("QQ").readArray(bits, streams)
-                else { if (readQQ) series("QQ").skipArray(bits, streams); Array.emptyByteArray }
-              Feature(fpos, 'q', 0, qq)
-            case 'D' => Feature(fpos, 'D', series("DL").readInt(bits, streams), null)
-            case 'N' => Feature(fpos, 'N', series("RS").readInt(bits, streams), null)
-            case 'H' => Feature(fpos, 'H', series("HC").readInt(bits, streams), null)
-            case 'P' => Feature(fpos, 'P', series("PD").readInt(bits, streams), null)
+                if (wantQual) qqR.readArray()
+                else { if (readQQ) qqR.skipArray(); Array.emptyByteArray }
+              feats.add(fpos, 'q', 0, qq)
+            case 'D' => feats.add(fpos, 'D', dlR.readInt(), null)
+            case 'N' => feats.add(fpos, 'N', rsR.readInt(), null)
+            case 'H' => feats.add(fpos, 'H', hcR.readInt(), null)
+            case 'P' => feats.add(fpos, 'P', pdR.readInt(), null)
             case 'B' =>
-              val ba = if (readBA) series("BA").readByte(bits, streams) else 'N'.toInt
-              val qs = if (readQS) series("QS").readByte(bits, streams) else 0
-              Feature(fpos, 'B', qs, Array(ba.toByte))
-            case 'Q' =>
-              Feature(fpos, 'Q', if (readQS) series("QS").readByte(bits, streams) else 0, null)
+              val ba = if (readBA) baR.readByte() else 'N'.toInt
+              val qs = if (readQS) qsR.readByte() else 0
+              feats.add(fpos, 'B', qs, Array(ba.toByte))
+            case 'Q' => feats.add(fpos, 'Q', if (readQS) qsR.readByte() else 0, null)
             case other => throw new IOException(s"unknown CRAM read feature '$other'")
           }
-          features = feat :: features
           f += 1
         }
-        mq = series("MQ").readInt(bits, streams)
-        if ((cf & 0x1) != 0) {
-          if (wantQual) {
-            quals = new Array[Byte](rl)
-            var k = 0
-            while (k < rl) { quals(k) = series("QS").readByte(bits, streams).toByte; k += 1 }
-          } else if (readQS) {
-            // consumed only for stream sync: advance, allocate nothing
-            var k = 0
-            while (k < rl) { series("QS").readByte(bits, streams); k += 1 }
-          }
-        }
-      } else {
-        if (wantSeq) {
-          val bases = new Array[Byte](rl)
-          var k = 0
-          while (k < rl) { bases(k) = series("BA").readByte(bits, streams).toByte; k += 1 }
-          features = List(Feature(1, 'b', 0, bases))
-        } else {
-          if (readBA) { // consumed only for stream sync
-            var k = 0
-            while (k < rl) { series("BA").readByte(bits, streams); k += 1 }
-          }
-          features = List(Feature(1, 'b', 0, Array.emptyByteArray)) // bases carrier, seq pruned
-        }
-        if ((cf & 0x1) != 0) {
-          if (wantQual) {
-            quals = new Array[Byte](rl)
-            var k = 0
-            while (k < rl) { quals(k) = series("QS").readByte(bits, streams).toByte; k += 1 }
-          } else if (readQS) {
-            var k = 0
-            while (k < rl) { series("QS").readByte(bits, streams); k += 1 }
-          }
-        }
+        mq = mqR.readInt()
+      } else if (wantSeq) {
+        bases = new Array[Byte](rl)
+        baR.readBytes(bases, 0, rl)
+      } else if (readBA && rl > 0) baR.skipBytes(rl) // consumed only for stream sync
+      var quals: Array[Byte] = null
+      if ((cf & 0x1) != 0) {
+        if (wantQual) {
+          quals = new Array[Byte](rl)
+          qsR.readBytes(quals, 0, rl)
+        } else if (readQS && rl > 0) qsR.skipBytes(rl) // stream sync: advance, allocate nothing
       }
-      raws(i) = Raw(bf, cf, rid, rl, start, rg, name, mf, mateRid, matePos, tlen, nfDist,
-        attrs.reverse, features.reverse, mq, quals)
+      raws(i) = new Raw(bf, cf, rid, rl, start, name, mf, nfDist, attrs.result(), mq, bases, quals)
       i += 1
     }
+    feats.first(nRec) = feats.n
 
     // mate resolution + row building
-    val flags = new Array[Int](raws.length)
-    val mates = new Array[(Int, Int, Int)](raws.length) // (mateRid, matePos, tlen)
+    val flags = new Array[Int](nRec)
     i = 0
-    while (i < raws.length) {
-      val r = raws(i)
-      flags(i) = r.bf
-      mates(i) = (r.mateRid, r.matePos, r.tlen)
-      i += 1
-    }
+    while (i < nRec) { flags(i) = raws(i).bf; i += 1 }
+    def mateBits(of: Raw): Int =
+      (if ((of.bf & 0x10) != 0) 0x20 else 0) | (if ((of.bf & 0x4) != 0) 0x8 else 0)
     i = 0
-    while (i < raws.length) {
+    while (i < nRec) {
       val r = raws(i)
       if ((r.cf & 0x2) != 0) {
         // detached: restore the two mate flag bits from MF
@@ -586,49 +659,48 @@ object CramRecordCodec {
           (if ((r.mf & 2) != 0) 0x8 else 0)
       } else if (r.nfDist >= 0) {
         val j = i + r.nfDist + 1
-        if (j >= raws.length)
+        if (j >= nRec)
           throw new IOException(s"next-fragment distance ${r.nfDist} escapes slice")
         val m = raws(j)
-        def mateBits(of: Raw): Int =
-          (if ((of.bf & 0x10) != 0) 0x20 else 0) | (if ((of.bf & 0x4) != 0) 0x8 else 0)
         flags(i) = (flags(i) & ~0x28) | mateBits(m)
         flags(j) = (flags(j) & ~0x28) | mateBits(r)
         val bothMapped = (r.bf & 0x4) == 0 && (m.bf & 0x4) == 0 && r.rid >= 0 && r.rid == m.rid
-        val (ti, tj) =
-          if (!bothMapped) (0, 0)
-          else {
-            val endR = r.start + refLen(r.features, r.rl) - 1
-            val endM = m.start + refLen(m.features, m.rl) - 1
-            val left = math.min(r.start, m.start)
-            val right = math.max(endR, endM)
-            val size = right - left + 1
-            if (r.start <= m.start) (size, -size) else (-size, size)
-          }
-        mates(i) = (m.rid, m.start, ti)
-        mates(j) = (r.rid, r.start, tj)
+        var ti = 0
+        var tj = 0
+        if (bothMapped) {
+          val endR = r.start + refLen(feats, i, r.rl) - 1
+          val endM = m.start + refLen(feats, j, m.rl) - 1
+          val size = math.max(endR, endM) - math.min(r.start, m.start) + 1
+          if (r.start <= m.start) { ti = size; tj = -size } else { ti = -size; tj = size }
+        }
+        mRid(i) = m.rid; mPos(i) = m.start; mTlen(i) = ti
+        mRid(j) = r.rid; mPos(j) = r.start; mTlen(j) = tj
       }
       i += 1
     }
 
-    (0 until raws.length).iterator.map { k =>
+    val cig = new CigarBuilder
+    Iterator.tabulate(nRec) { k =>
       val r = raws(k)
       val unmapped = (r.bf & 0x4) != 0
-      val (seqStr, cigar) =
-        if (unmapped) {
-          val s = if (wantSeq) new String(r.features.head.bytes, "ASCII") else "*"
-          (if (s.isEmpty) "*" else s, "*")
-        } else {
-          val (s, c) = reconstruct(r.rl, r.start, r.features, refWindow, refBase1, sub,
-            seqUnknown = (r.cf & 0x8) != 0, wantSeq = wantSeq)
-          (if (s.isEmpty) "*" else s, c)
-        }
+      var seqStr = "*"
+      var cigar = "*"
+      if (unmapped) {
+        if (wantSeq && r.rl > 0) seqStr = new String(r.bases, StandardCharsets.US_ASCII)
+      } else {
+        val s = reconstruct(r.rl, r.start, feats, k, refWindow, refBase1, sub,
+          seqUnknown = (r.cf & 0x8) != 0, wantSeq = wantSeq, cig)
+        if (s != null) seqStr = s
+        cigar = cig.result()
+      }
       val qual =
         if (r.quals == null) "*"
-        else new String(r.quals.map(q => (q + 33).toByte), "ASCII")
-      val attrsWithRg =
-        if (r.rg >= 0 && r.rg < rgIds.length) r.attrs :+ ("RG" -> ("Z:" + rgIds(r.rg)))
-        else r.attrs
-      val (mateRid, matePos, tlen) = mates(k)
+        else {
+          val q = r.quals
+          var p = 0
+          while (p < q.length) { q(p) = (q(p) + 33).toByte; p += 1 }
+          new String(q, StandardCharsets.US_ASCII)
+        }
       AlignmentRecord(
         readName = if (r.name == null || r.name.isEmpty || r.name == "*") null else r.name,
         flags = flags(k),
@@ -636,123 +708,119 @@ object CramRecordCodec {
         start = if (r.start < 0) 0 else r.start,
         end = {
           // BamModel convention: 0 when unmapped or no ref-consuming op
-          val rlen = if (unmapped) 0 else refLen(r.features, r.rl)
+          val rlen = if (unmapped) 0 else refLen(feats, k, r.rl)
           if (rlen > 0) r.start + rlen - 1 else 0
         },
         mapq = r.mq,
         cigar = cigar,
-        mateContig = header.refName(mateRid),
-        mateStart = matePos,
-        tlen = tlen,
+        mateContig = header.refName(mRid(k)),
+        mateStart = mPos(k),
+        tlen = mTlen(k),
         seq = seqStr,
         qual = qual,
-        attributes = attrsWithRg.toMap)
+        attributes = r.attrs)
     }
   }
 
-  /** Reference bases consumed by the record (M runs between/around features
-    * plus D/N feature lengths) — alignment end = start + refLen − 1.
+  /** Reference bases consumed by record `rec` (M runs between/around
+    * features plus D/N feature lengths): alignment end = start + refLen − 1.
     */
-  private def refLen(features: List[Feature], rl: Int): Int = {
+  private def refLen(feats: Features, rec: Int, rl: Int): Int = {
     var readPos = 1
     var ref = 0
-    features.foreach { f =>
-      val gap = f.pos - readPos
+    var f = feats.first(rec)
+    val end = feats.first(rec + 1)
+    while (f < end) {
+      val gap = feats.pos(f) - readPos
       if (gap > 0) { ref += gap; readPos += gap }
-      f.code match {
+      feats.code(f) match {
         case 'X' | 'B' => ref += 1; readPos += 1
-        case 'b' => ref += f.bytes.length; readPos += f.bytes.length
-        case 'S' | 'I' => readPos += f.bytes.length
+        case 'b' => ref += feats.bytes(f).length; readPos += feats.bytes(f).length
+        case 'S' | 'I' => readPos += feats.bytes(f).length
         case 'i' => readPos += 1
-        case 'D' | 'N' => ref += f.intVal
+        case 'D' | 'N' => ref += feats.intVal(f)
         case _ => // H, P, q, Q: neither
       }
+      f += 1
     }
     val tail = rl - readPos + 1
     if (tail > 0) ref += tail
     ref
   }
 
-  /** Rebuild SEQ and CIGAR from features over the reference window. With
-    * `wantSeq = false` only the cigar is built — no seq array, no reference
-    * base lookups, no substitution decodes (the projection fast path).
+  /** Rebuild record `rec`'s SEQ and CIGAR from its features over the
+    * reference window; the CIGAR is left in `cig`, and the SEQ is returned
+    * (null for `*`). With `wantSeq = false` only the cigar is built: no seq
+    * array, no reference base lookups, no substitution decodes (the
+    * projection fast path).
     */
-  private def reconstruct(rl: Int, start: Int, features: List[Feature],
+  private def reconstruct(rl: Int, start: Int, feats: Features, rec: Int,
                           refWindow: Array[Byte], refBase1: Int,
                           sub: Array[Array[Byte]], seqUnknown: Boolean,
-                          wantSeq: Boolean = true): (String, String) = {
-    val seq = if (wantSeq) Array.fill[Byte](rl)('N') else null
-    val cig = new scala.collection.mutable.ArrayBuffer[(Char, Int)]()
-    def emit(op: Char, n: Int): Unit =
-      if (n > 0) {
-        if (cig.nonEmpty && cig.last._1 == op) cig(cig.length - 1) = (op, cig.last._2 + n)
-        else cig += ((op, n))
+                          wantSeq: Boolean, cig: CigarBuilder): String = {
+    val seq = if (wantSeq) new Array[Byte](rl) else null
+    if (wantSeq) java.util.Arrays.fill(seq, 'N'.toByte)
+    // a match run of `n` bases at read offset `off`: one copy of the part
+    // inside the reference window; bases outside it stay `N`
+    def matchRun(off: Int, refPos: Int, n: Int): Unit =
+      if (refWindow != null) {
+        val idx = refPos - refBase1
+        val lo = math.max(idx, 0)
+        val hi = math.min(idx + n, refWindow.length)
+        if (lo < hi) System.arraycopy(refWindow, lo, seq, off + (lo - idx), hi - lo)
       }
-    def refBase(rp: Int): Byte = {
-      if (refWindow == null) 'N'
-      else {
-        val idx = rp - refBase1
-        if (idx >= 0 && idx < refWindow.length) refWindow(idx) else 'N'
-      }
-    }
     var readPos = 1
     var refPos = start
-    features.foreach { f =>
-      val gap = f.pos - readPos
+    var f = feats.first(rec)
+    val end = feats.first(rec + 1)
+    while (f < end) {
+      val gap = feats.pos(f) - readPos
       if (gap > 0) {
-        if (wantSeq) {
-          var i = 0
-          while (i < gap) { seq(readPos - 1 + i) = refBase(refPos + i); i += 1 }
-        }
-        emit('M', gap); readPos += gap; refPos += gap
+        if (wantSeq) matchRun(readPos - 1, refPos, gap)
+        cig.emit('M', gap); readPos += gap; refPos += gap
       }
-      f.code match {
+      val bytes = feats.bytes(f)
+      feats.code(f) match {
         case 'X' =>
           if (wantSeq) {
-            val rb = refBase(refPos)
-            seq(readPos - 1) = sub(baseIndex(rb))(f.intVal & 3)
+            val idx = refPos - refBase1
+            val rb: Byte =
+              if (refWindow != null && idx >= 0 && idx < refWindow.length) refWindow(idx) else 'N'
+            seq(readPos - 1) = sub(baseIndex(rb))(feats.intVal(f) & 3)
           }
-          emit('M', 1); readPos += 1; refPos += 1
+          cig.emit('M', 1); readPos += 1; refPos += 1
         case 'S' =>
-          if (wantSeq) copyBytes(f.bytes, seq, readPos - 1)
-          emit('S', f.bytes.length); readPos += f.bytes.length
+          if (wantSeq) System.arraycopy(bytes, 0, seq, readPos - 1, bytes.length)
+          cig.emit('S', bytes.length); readPos += bytes.length
         case 'I' =>
-          if (wantSeq) copyBytes(f.bytes, seq, readPos - 1)
-          emit('I', f.bytes.length); readPos += f.bytes.length
+          if (wantSeq) System.arraycopy(bytes, 0, seq, readPos - 1, bytes.length)
+          cig.emit('I', bytes.length); readPos += bytes.length
         case 'i' =>
-          if (wantSeq) seq(readPos - 1) = f.bytes(0)
-          emit('I', 1); readPos += 1
+          if (wantSeq) seq(readPos - 1) = bytes(0)
+          cig.emit('I', 1); readPos += 1
         case 'b' =>
-          if (wantSeq) copyBytes(f.bytes, seq, readPos - 1)
-          emit('M', f.bytes.length)
-          readPos += f.bytes.length; refPos += f.bytes.length
+          if (wantSeq) System.arraycopy(bytes, 0, seq, readPos - 1, bytes.length)
+          cig.emit('M', bytes.length)
+          readPos += bytes.length; refPos += bytes.length
         case 'B' =>
-          if (wantSeq) seq(readPos - 1) = f.bytes(0)
-          emit('M', 1); readPos += 1; refPos += 1
-        case 'D' => emit('D', f.intVal); refPos += f.intVal
-        case 'N' => emit('N', f.intVal); refPos += f.intVal
-        case 'H' => emit('H', f.intVal)
-        case 'P' => emit('P', f.intVal)
+          if (wantSeq) seq(readPos - 1) = bytes(0)
+          cig.emit('M', 1); readPos += 1; refPos += 1
+        case 'D' => cig.emit('D', feats.intVal(f)); refPos += feats.intVal(f)
+        case 'N' => cig.emit('N', feats.intVal(f)); refPos += feats.intVal(f)
+        case 'H' => cig.emit('H', feats.intVal(f))
+        case 'P' => cig.emit('P', feats.intVal(f))
         case 'q' | 'Q' => // quality-only features: no seq/cigar effect here
         case other => throw new IOException(s"unknown CRAM read feature '$other'")
       }
+      f += 1
     }
     val tail = rl - readPos + 1
     if (tail > 0) {
-      if (wantSeq) {
-        var i = 0
-        while (i < tail) { seq(readPos - 1 + i) = refBase(refPos + i); i += 1 }
-      }
-      emit('M', tail)
+      if (wantSeq) matchRun(readPos - 1, refPos, tail)
+      cig.emit('M', tail)
     }
-    val cigar =
-      if (cig.isEmpty) "*"
-      else cig.iterator.map { case (op, n) => s"$n$op" }.mkString
-    (if (seqUnknown || !wantSeq) "*" else new String(seq, "ASCII"), cigar)
+    if (seqUnknown || !wantSeq || rl == 0) null else new String(seq, StandardCharsets.US_ASCII)
   }
-
-  private def copyBytes(src: Array[Byte], dst: Array[Byte], off: Int): Unit =
-    System.arraycopy(src, 0, dst, off, src.length)
 
   // ---- file-level helpers --------------------------------------------------
 

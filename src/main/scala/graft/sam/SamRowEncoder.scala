@@ -10,7 +10,7 @@ import graft.sources.bam.RowToRecord
   * bypassing the AlignmentRecord/String/Map materialization. Byte-compatible
   * with `(SamCodec.toLine(RowToRecord.convert(row, idx)) + "\n").getBytes` —
   * proven by SamRowEncoderSpec; shapes outside the fast path (non-ASCII
-  * attribute keys/values) fall back to that spec path.
+  * mandatory fields, attribute keys or values) fall back to that spec path.
   */
 final class SamRowEncoder(schema: StructType) {
   private val idx = RowToRecord.indices(schema)
@@ -46,6 +46,8 @@ final class SamRowEncoder(schema: StructType) {
     true
   }
 
+  private def asciiOrNull(s: UTF8String): Boolean = s == null || ascii(s)
+
   def encode(row: InternalRow): Int = {
     pos = 0
     val x = idx
@@ -58,6 +60,11 @@ final class SamRowEncoder(schema: StructType) {
     val mateContig = str(x.mateContig)
     val seq = str(x.seq)
     val qual = str(x.qual)
+    // the mandatory fields take the fast path only when ASCII: malformed
+    // UTF-8 must come out as the spec path's String round-trip makes it
+    if (!asciiOrNull(name) || !asciiOrNull(contig) || !asciiOrNull(cigar) ||
+        !asciiOrNull(mateContig) || !asciiOrNull(seq) || !asciiOrNull(qual))
+      return fallback(row)
     if (name == null) putByte('*') else putUtf8(name)
     putByte('\t'); putInt(int(x.flags)); putByte('\t')
     if (contig == null) putByte('*') else putUtf8(contig)
@@ -66,7 +73,7 @@ final class SamRowEncoder(schema: StructType) {
     if (cigar == null) putByte('*') else putUtf8(cigar)
     putByte('\t')
     // mate rname: '=' when equal to contig (String == of the spec path is
-    // byte equality for the valid UTF-8 Catalyst strings carry)
+    // byte equality for the ASCII this path carries)
     if (mateContig == null) putByte('*')
     else if (contig != null && mateContig.equals(contig)) putByte('=')
     else putUtf8(mateContig)

@@ -737,12 +737,16 @@ class CramRecordsPartitionReader(
 
   /** Decode `c`'s payload into `recIt`; false = container skipped (lenient/
     * permissive salvage — the NEXT container is independent, so a payload
-    * failure drops only this one).
+    * failure drops only this one). The container's slices decode here, in
+    * full, so a failure anywhere in them (block inflation, an exhausted
+    * stream, a bad feature) drops the whole container rather than failing
+    * the task after some of its records have been emitted.
     */
   private def decodeInto(c: CramContainer): Boolean =
     try {
       recIt = CramRecordCodec.decodeContainer(
         CramRecordCodec.containerPayload(input, c), major, header, refSource, fieldMask)
+        .toArray.iterator
       true
     } catch {
       case e: Exception if mode != Stringency.Strict =>
@@ -750,6 +754,9 @@ class CramRecordsPartitionReader(
           slog.skip(s"container payload at ${c.offset} in $file: ${e.getMessage}")
         else slog.skipSilently()
         false
+      case e: Exception =>
+        throw new java.io.IOException(
+          s"malformed CRAM container payload at ${c.offset} in $file: ${e.getMessage}", e)
     }
 
   /** Advance to the next selected+decoded container; false when exhausted. */

@@ -127,4 +127,218 @@ class CramRecordCodecSpec extends AnyFunSuite {
     assert(back.head.seq == "*")
     assert(back.head.end == 5 + (3 + 2 + 5 + 1 + 2) - 1)
   }
+
+  // ---- hand-built slices ---------------------------------------------------
+  // Slices written value by value in the decoder's read order, over codecs
+  // with sparse and large content ids and blocks shared between series and
+  // tags; the expected records are derived by hand from the CRAM spec.
+
+  private def key(tag: String, typ: Char): Int =
+    (tag.charAt(0).toInt << 16) | (tag.charAt(1).toInt << 8) | typ.toInt
+
+  private val Big = 1 << 24
+  private val handSeries: Map[String, CCodec] = Map(
+    "BF" -> CExternal(0), "CF" -> CExternal(0), // two series on one block
+    "RI" -> CExternal(7), "RL" -> CExternal(7), "AP" -> CExternal(7),
+    "RG" -> CExternal(7), "MQ" -> CExternal(7),
+    "RN" -> CByteArrayStop(0, 40000),
+    "MF" -> CExternal(Big), "NS" -> CExternal(Big), "NP" -> CExternal(Big),
+    "TS" -> CExternal(Big), "NF" -> CExternal(Big), "TL" -> CExternal(Big),
+    "FN" -> CExternal(5), "FC" -> CExternal(5), "FP" -> CExternal(5),
+    "BS" -> CExternal(6), "DL" -> CExternal(6), "RS" -> CExternal(6),
+    "HC" -> CExternal(6), "PD" -> CExternal(6),
+    "SC" -> CByteArrayStop(0, 300), "IN" -> CByteArrayStop(0, 300),
+    "BB" -> CByteArrayStop(0, 301),
+    "BA" -> CExternal(25), "QS" -> CExternal(70000),
+    // lengths on a series block, values on the QS block
+    "QQ" -> CByteArrayLen(CExternal(7), CExternal(70000)))
+  private val handTags: Map[Int, CCodec] = Map(
+    // a tag sharing blocks with series: lengths with TL, values with RN
+    key("NM", 'C') -> CByteArrayLen(CExternal(Big), CExternal(40000)),
+    key("XZ", 'Z') -> CByteArrayStop(9, 40000))
+  private val handDict = Vector(Vector(("NM", 'C'), ("XZ", 'Z')), Vector.empty)
+  private val handHeader = SamHeader("@HD\tVN:1.6\n@RG\tID:grp1\n",
+    IndexedSeq(BamRef("chr1", 1000), BamRef("chr2", 1000)))
+
+  /** Reference positions 100..129 of chr1. */
+  private val window = "ACGTTGCAACGGTACCATGATCGATCGGCA"
+  private val windowRefs = new CramRefSource {
+    override def region(rid: Int, start1: Int, span: Int): Array[Byte] = {
+      assert(rid == 0 && start1 == 100 && span == 30)
+      window.getBytes("ASCII")
+    }
+  }
+
+  /** Test-side writer: each value goes to the block(s) its codec reads. */
+  private final class SliceBlocks(series: Map[String, CCodec]) {
+    private val out = scala.collection.mutable.Map.empty[Int, java.io.ByteArrayOutputStream]
+    private def block(cid: Int) = out.getOrElseUpdate(cid, new java.io.ByteArrayOutputStream())
+    def int(c: CCodec, v: Int): Unit = c match {
+      case CExternal(cid) => block(cid).write(Itf8.write(v))
+    }
+    def byte(c: CCodec, v: Int): Unit = c match {
+      case CExternal(cid) => block(cid).write(v)
+    }
+    def array(c: CCodec, a: Array[Byte]): Unit = c match {
+      case CByteArrayStop(stop, cid) => block(cid).write(a); block(cid).write(stop)
+      case CByteArrayLen(l, v) => int(l, a.length); a.foreach(b => byte(v, b))
+    }
+    def int(s: String, v: Int): Unit = int(series(s), v)
+    def byte(s: String, v: Int): Unit = byte(series(s), v)
+    def array(s: String, a: String): Unit = array(series(s), a.getBytes("ASCII"))
+    def blocks: Map[Int, Array[Byte]] = out.map { case (k, v) => k -> v.toByteArray }.toMap
+  }
+
+  /** Five records over `window`: a detached mate crossing the window's left
+    * edge with an `X` substitution; a next-fragment pair whose first read
+    * crosses the right edge and whose second carries every other feature
+    * code; an unmapped read; a mapped read with unknown sequence.
+    */
+  private def handSlice(refSeqId: Int, series: Map[String, CCodec]): Map[Int, Array[Byte]] = {
+    val w = new SliceBlocks(series)
+    def head(bf: Int, cf: Int, rl: Int, ap: Int, rg: Int, name: String): Unit = {
+      w.int("BF", bf); w.int("CF", cf)
+      if (refSeqId == -2) w.int("RI", 0)
+      w.int("RL", rl); w.int("AP", ap); w.int("RG", rg); w.array("RN", name)
+    }
+    def tags(nm: Int, xz: String): Unit = {
+      w.int("TL", 0)
+      w.array(handTags(key("NM", 'C')), Array(nm.toByte))
+      w.array(handTags(key("XZ", 'Z')), (xz + "\u0000").getBytes("ASCII"))
+    }
+    def feature(code: Char, delta: Int): Unit = { w.byte("FC", code); w.int("FP", delta) }
+    // r1: detached, MF = 3 (mate reverse + unmapped), 97..108 with X at read 6
+    head(0x41, 0x3, 12, 97, 0, "r1")
+    w.int("MF", 3); w.int("NS", 1); w.int("NP", 500); w.int("TS", -100)
+    tags(3, "foo")
+    w.int("FN", 1); feature('X', 6); w.byte("BS", 2)
+    w.int("MQ", 60)
+    (1 to 12).foreach(q => w.byte("QS", q))
+    // r2: mate is the next record, 125..132 (three bases past the window)
+    head(0x41, 0x5, 8, 125, -1, "r2")
+    w.int("NF", 0)
+    w.int("TL", 1)
+    w.int("FN", 0)
+    w.int("MQ", 30)
+    (1 to 8).foreach(q => w.byte("QS", 40 - q))
+    // r3: S B I i Q q D N b H P X, reverse strand, 101..115
+    head(0x91, 0x1, 15, 101, 0, "r3")
+    tags(200, "")
+    w.int("FN", 12)
+    feature('S', 1); w.array("SC", "GG")
+    feature('B', 2); w.byte("BA", 'T'); w.byte("QS", 30)
+    feature('I', 1); w.array("IN", "AA")
+    feature('i', 2); w.byte("BA", 'C')
+    feature('Q', 1); w.byte("QS", 20)
+    feature('q', 0); w.array("QQ", "!!")
+    feature('D', 2); w.int("DL", 3)
+    feature('N', 0); w.int("RS", 2)
+    feature('b', 0); w.array("BB", "ACG")
+    feature('H', 3); w.int("HC", 4)
+    feature('P', 0); w.int("PD", 1)
+    feature('X', 0); w.byte("BS", 0)
+    w.int("MQ", 255)
+    (0 until 15).foreach(q => w.byte("QS", q * 2))
+    // r4: unmapped, bases and qualities
+    head(0x4, 0x1, 6, 0, 0, "r4")
+    w.int("TL", 1)
+    "ACGTNA".foreach(b => w.byte("BA", b))
+    (1 to 6).foreach(q => w.byte("QS", q))
+    // r5: mapped, unknown sequence, no qualities: 2M3D4M over 110..118
+    head(0x0, 0x8, 6, 110, -1, "*")
+    w.int("TL", 1)
+    w.int("FN", 1); feature('D', 3); w.int("DL", 3)
+    w.int("MQ", 5)
+    w.blocks
+  }
+
+  private def phred(qs: Seq[Int]): String = qs.map(q => (q + 33).toChar).mkString
+
+  private val handWant = IndexedSeq(
+    AlignmentRecord("r1", 0x69, "chr1", 97, 108, 60, "12M", "chr2", 500, -100,
+      "NNNACTTTGCAA", phred(1 to 12),
+      Map("NM" -> "C:3", "XZ" -> "Z:foo", "RG" -> "Z:grp1")),
+    AlignmentRecord("r2", 0x61, "chr1", 125, 132, 30, "8M", "chr1", 101, -32,
+      "CGGCANNN", phred((1 to 8).map(40 - _)), Map.empty),
+    AlignmentRecord("r3", 0x91, "chr1", 101, 115, 255, "2S1M3I2M3D2N3M4H1P4M", "chr1", 125, 32,
+      "GGTAACGTACGAACC", phred((0 until 15).map(_ * 2)),
+      Map("NM" -> "C:200", "XZ" -> "Z:", "RG" -> "Z:grp1")),
+    AlignmentRecord("r4", 0x4, "chr1", 0, 0, 0, "*", null, 0, 0,
+      "ACGTNA", phred(1 to 6), Map("RG" -> "Z:grp1")),
+    AlignmentRecord(null, 0x0, "chr1", 110, 118, 5, "2M3D4M", null, 0, 0, "*", "*", Map.empty))
+
+  private def handComp(series: Map[String, CCodec] = handSeries) =
+    CramRecordCodec.CompHeader(rnPreserved = true, apDelta = false, refRequired = false,
+      subMatrix = Array.fill[Byte](5)(0x1b), tagDict = handDict,
+      series = series, tagCodecs = handTags)
+
+  private def handSliceHeader(refSeqId: Int, blocks: Map[Int, Array[Byte]]) =
+    CramRecordCodec.SliceHeader(refSeqId, 100, 30, handWant.length, blocks.size,
+      blocks.keys.toArray, -1, new Array[Byte](16))
+
+  private def assertRecords(got: IndexedSeq[AlignmentRecord], want: IndexedSeq[AlignmentRecord]): Unit = {
+    assert(got.length == want.length)
+    got.zip(want).foreach { case (g, w) =>
+      assert(g.productIterator.toSeq == w.productIterator.toSeq,
+        s"record ${w.readName}:\n got  $g\n want $w")
+    }
+  }
+
+  test("hand-built slice: sparse and shared content ids, every feature code, window edges") {
+    val blocks = handSlice(0, handSeries)
+    assert(blocks.keySet == Set(0, 5, 6, 7, 25, 300, 301, 40000, 70000, Big))
+    val got = CramRecordCodec.decodeSlice(handComp(), handSliceHeader(0, blocks),
+      Array.emptyByteArray, blocks, handHeader, windowRefs).toVector
+    assertRecords(got, handWant)
+  }
+
+  test("hand-built slice: projected decode keeps shared streams in step") {
+    val blocks = handSlice(0, handSeries)
+    val lazyBlocks = blocks.map { case (k, v) =>
+      k -> new CramRecordCodec.LazyBlock(0, 4, k, v, v.length) }
+    val mask = graft.bam.BamFieldMask(cigarAndEnd = true, seq = false, qual = false, attrs = false)
+    val got = CramRecordCodec.decodeSlice(handComp(), handSliceHeader(0, blocks),
+      Array.emptyByteArray, lazyBlocks, handHeader, NoRefSource, mask).toVector
+    assertRecords(got, handWant.map(r => r.copy(seq = "*", qual = "*",
+      attributes = r.attributes.filter(_._1 == "RG"))))
+  }
+
+  test("hand-built slice: RI is read only by multi-reference slices") {
+    // RI absent from the header: a single-reference slice never reads it
+    val noRi = handSeries - "RI"
+    val blocks = handSlice(0, noRi)
+    val got = CramRecordCodec.decodeSlice(handComp(noRi), handSliceHeader(0, blocks),
+      Array.emptyByteArray, blocks, handHeader, windowRefs).toVector
+    assertRecords(got, handWant)
+    // a multi-reference slice (refSeqId -2) carries RI per record: with RI
+    // present it decodes (no reference window: matches read N, and X
+    // substitutes from N) ...
+    val multi = handSlice(-2, handSeries)
+    val back = CramRecordCodec.decodeSlice(handComp(), handSliceHeader(-2, multi),
+      Array.emptyByteArray, multi, handHeader, NoRefSource).toVector
+    assert(back.map(_.cigar) == handWant.map(_.cigar))
+    assert(back(0).seq == "NNNNNGNNNNNN" && back(2).seq == "GGTAACNNACGANNN")
+    // ... and without it fails on the first record
+    val ex = intercept[java.io.IOException](
+      CramRecordCodec.decodeSlice(handComp(noRi), handSliceHeader(-2, multi),
+        Array.emptyByteArray, multi, handHeader, NoRefSource).toVector)
+    assert(ex.getMessage == "CRAM data series RI missing")
+  }
+
+  test("external ITF-8 reads stop at the block end") {
+    def readInt(bytes: Array[Byte], n: Int): Unit = {
+      val r = CExternal(9).bind(new BitReader(Array.emptyByteArray),
+        new ExtStreams(Map(9 -> bytes).get _))
+      (0 until n).foreach(_ => r.readInt())
+    }
+    readInt(Array[Byte](5, 0x81.toByte, 1), 2) // a whole block reads cleanly
+    // one value past the end
+    val single = intercept[java.io.IOException](readInt(Array[Byte](5), 2))
+    assert(single.getMessage == "CRAM external block 9 exhausted")
+    // a multi-byte value cut off by the block end, for each ITF-8 width
+    for (cut <- Seq(Array(0x81), Array(0xc1, 2), Array(0xe1, 2, 3), Array(0xf1, 2, 3, 4))) {
+      val ex = intercept[java.io.IOException](readInt(cut.map(_.toByte), 1))
+      assert(ex.getMessage == "CRAM external block 9 exhausted", cut.mkString(","))
+    }
+  }
 }

@@ -305,4 +305,56 @@ class CramRecordsSourceSpec extends AnyFunSuite with SparkFixture {
       assert(row.getAs[Map[String, String]]("attributes") == r.attributes)
     }
   }
+
+  test("stringency: a slice-body failure fails strict with file and offset, lenient/permissive drop its container") {
+    val dir = tmpDir()
+    val out = dir.resolve("bad.cram")
+    reads(3000).coalesce(1).write.format("cram").mode("overwrite")
+      .option("records", "true").option("refs", Refs)
+      .option("recordsPerContainer", "500")
+      .option("writeCrai", "true").save(out.toString)
+    // the BF block (content id 1, read by every record) of data container 3
+    // gets the unsupported compression method 9. The container header and
+    // its CRC stay intact and block CRCs are not checked, so the failure
+    // surfaces only when the slice body decodes.
+    val in = graft.bgzf.SeekableInput.ofFile(out)
+    val (victim, methodAt) = try {
+      val (major, _) = CramContainers.readFileDefinition(in)
+      val c = CramContainers.containers(in).filter(c => !c.isEof && c.nRecords > 0)(3)
+      val payload = CramRecordCodec.containerPayload(in, c)
+      var p = 0
+      var at = -1L
+      while (at < 0 && p < payload.length) {
+        val (blk, next) = CramRecordCodec.readBlockLazy(payload, p, major)
+        if (blk.ctype == 4 && blk.cid == 1) at = c.offset + (c.totalLength - c.dataLength) + p
+        p = next
+      }
+      assert(at >= 0, "no BF block found")
+      (c, at)
+    } finally in.close()
+    val raf = new java.io.RandomAccessFile(out.toFile, "rw")
+    try { raf.seek(methodAt); raf.write(9) } finally raf.close()
+    // Hadoop LocalFileSystem's own .crc sidecar no longer matches the edit
+    Files.deleteIfExists(dir.resolve(".bad.cram.crc"))
+
+    // rows are decoded and collected: a bare count() is answered from the
+    // container headers without decoding a slice
+    def count(mode: Option[String]): Long = {
+      var r = spark.read.format("cram").option("records", "true")
+      mode.foreach(m => r = r.option("mode", m))
+      r.load(out.toString).select(col("readName")).collect().length.toLong
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    // both routes: `.crai`-listed offsets first, then byte-range discovery
+    for (route <- Seq("crai", "range")) {
+      if (route == "range") Files.delete(dir.resolve("bad.cram.crai"))
+      val msg = messages(intercept[Exception](count(None))).mkString(" | ")
+      assert(msg.contains(s"malformed CRAM container payload at ${victim.offset}"), s"$route: $msg")
+      assert(msg.contains("bad.cram"), s"$route: $msg")
+      assert(msg.contains("unsupported CRAM block compression method 9"), s"$route: $msg")
+      assert(count(Some("lenient")) == 3000 - victim.nRecords, route)
+      assert(count(Some("permissive")) == 3000 - victim.nRecords, route)
+    }
+  }
 }

@@ -68,4 +68,35 @@ class SamRowEncoderSpec extends AnyFunSuite {
     assertIdentical(row("r", 0, "chr1", 5, 0, 60, "3M", null, 0, 0, "ACG", "III",
       Seq("XN" -> "Z:vàl")), "non-ASCII value")
   }
+
+  test("property: malformed UTF-8 in any mandatory field matches the spec path") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // bytes drawn to hit every malformed shape: lone continuation bytes,
+    // truncated leads, overlong and never-valid bytes, mixed with ASCII
+    val genBytes: Gen[Array[Byte]] = Gen.chooseNum(1, 12).flatMap(n => Gen.listOfN(n,
+      Gen.frequency(3 -> Gen.choose(0x21, 0x7e), 1 -> Gen.choose(0x80, 0xbf),
+        1 -> Gen.choose(0xc0, 0xff))).map(_.map(_.toByte).toArray))
+    // row slots of readName, contig, cigar, mateContig, seq, qual
+    val fields = Seq(0, 2, 6, 7, 10, 11)
+    val gen = for {
+      field <- Gen.choose(0, 5)
+      bad <- genBytes
+      mateSame <- Gen.oneOf(true, false)
+    } yield (field, bad, mateSame)
+    val prop = Prop.forAll(gen) { case (field, bad, mateSame) =>
+      val r = row("r", 0, "chr1", 5, 0, 60, "3M", "chr2", 5, 0, "ACG", "III",
+        Seq("NM" -> "i:1"))
+      r.update(fields(field), UTF8String.fromBytes(bad))
+      // a malformed contig whose mate is its decoded (U+FFFD) form: equal
+      // as Strings, not as bytes, so the spec path prints '='
+      if (field == 1 && mateSame)
+        r.update(7, UTF8String.fromString(new String(bad, "UTF-8")))
+      val enc = new SamRowEncoder(schema)
+      val len = enc.encode(r)
+      val spec = (SamCodec.toLine(RowToRecord.convert(r, idx)) + "\n").getBytes("UTF-8")
+      java.util.Arrays.copyOf(enc.buf, len).sameElements(spec)
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
+    assert(res.passed, res.status.toString)
+  }
 }
